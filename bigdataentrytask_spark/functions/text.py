@@ -1,6 +1,8 @@
 """Portable text primitives: every helper has a Spark Column form and a
 DuckDB SQL-fragment twin computing bit-identical results, so the dedup
 and text-analysis operators can be differentially tested end-to-end.
+The tokenizer and the token hash also have Spark SQL text twins
+(`spark_sql_*`) for plans built as SQL strings.
 
 Hashing is md5-based (both engines ship md5) — the first 8 hex chars
 parsed as an integer give a deterministic 32-bit token hash that is
@@ -45,11 +47,23 @@ def sql_tokens(expr: str) -> str:
     )
 
 
+def spark_sql_tokens(expr: str) -> str:
+    """Spark SQL text twin of tokens(), for plans built as SQL strings."""
+    return f"filter(split(lower({expr}), '{TOKEN_SPLIT_RE}'), x -> x <> '')"
+
+
 def token_hash(col: Column | str) -> Column:
     """Token -> integer in [0, MERSENNE_P): md5 hex prefix mod p."""
     c = F.col(col) if isinstance(col, str) else col
     return (
         F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long") % MERSENNE_P
+    )
+
+
+def spark_sql_token_hash(expr: str) -> str:
+    """Spark SQL text twin of token_hash()."""
+    return (
+        f"cast(conv(substring(md5({expr}), 1, 8), 16, 10) as bigint) % {MERSENNE_P}"
     )
 
 

@@ -24,6 +24,8 @@ Scale posture (the whole point of these operators):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,6 +37,8 @@ from bigdataentrytask_spark.functions.text import (
     MINHASH_B,
     NUM_HASHES,
     normalize_text,
+    spark_sql_token_hash,
+    spark_sql_tokens,
     sql_normalize_text,
     sql_token_hash,
     sql_tokens,
@@ -49,6 +53,8 @@ MINHASH_THRESHOLD = 0.7
 SIMHASH_BITS = 60
 SIMHASH_CHUNKS = 4  # 4 x 15 bits; hamming<=3 ⇒ one chunk equal
 SIMHASH_MAX_HAMMING = 3
+
+_log = logging.getLogger(__name__)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -184,26 +190,29 @@ def _sql_match_frac() -> str:
 )
 def minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    est_bytes = _scan_size_bytes(docs)
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("tok")
-    )
-    hashes = toks.select("doc_id", token_hash("tok").alias("h"))
+    lanes = _kernel_lanes(spark, est_bytes=_scan_size_bytes(docs, "documents"))
+    # The whole plan up to the kernel is ONE Spark SQL statement over
+    # the `documents` frame, built from a handful of generated
+    # expression strings. Building the same stages through the Column
+    # API costs a py4j round trip per F.* call, per column name and per
+    # list element (plus PySpark's call-site capture on every F.*
+    # call): ~6,500 driver round trips per call for the 32 min/cast
+    # chains and 8 band structs, vs ~150 this way. The stages, plan and
+    # exchanges are the same either way. Literals that must be doubles
+    # carry a D suffix (`512.0D`, `32.0D`): in Spark SQL a bare `32.0`
+    # is a DECIMAL literal, which would turn est_sim decimal. The
+    # `{docs}` placeholder binds the DataFrame through spark.sql's
+    # formatter (a uuid-named view dropped right after parsing), so
+    # repeated and nested calls never share a named view.
+    sig = ", ".join(f"m{i}" for i in range(NUM_HASHES))
     # one grouped agg computes all K sketches in a single pass, packed
     # into ONE array column: the signature frame is (doc_id, 32 longs),
     # consumed exactly ONCE below — a linear DAG with no self-join, no
     # broadcast, no cache, and therefore no repeated recomputation of
     # the tokenize->hash->min pipeline.
-    mh = hashes.groupBy("doc_id").agg(
-        F.array(
-            *[
-                F.min(
-                    (F.lit(MINHASH_A[i]) * F.col("h") + F.lit(MINHASH_B[i]))
-                    % MERSENNE_P
-                )
-                for i in range(NUM_HASHES)
-            ]
-        ).alias("sig_arr")
+    mins = ", ".join(
+        f"min(({MINHASH_A[i]} * h + {MINHASH_B[i]}) % {MERSENNE_P})"
+        for i in range(NUM_HASHES)
     )
     # Signatures cross every downstream exchange as 32 FLAT INT columns
     # (each minhash value is < 2^31 by the mod-p construction, so int32
@@ -211,11 +220,8 @@ def minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Arrow transfer into the kernel lands as one contiguous int32
     # matrix per column instead of boxed list cells (guide §2.3
     # narrower types / §4.2 vectorized boundary).
-    sig_cols = [
-        F.col("sig_arr")[i].cast("int").alias(f"m{i}") for i in range(NUM_HASHES)
-    ]
-    sigs = mh.select("doc_id", *sig_cols)
-    # SIGNATURE-LEVEL COLLAPSE (the round-16 pre-pass): docs with
+    casts = ", ".join(f"cast(sig_arr[{i}] as int) AS m{i}" for i in range(NUM_HASHES))
+    # SIGNATURE-LEVEL COLLAPSE (the `sg` stage, round 16): docs with
     # IDENTICAL 32-sketch signatures are interchangeable everywhere
     # downstream — they collide in every band, qualify against exactly
     # the same partners with exactly the same match count, and pair
@@ -240,16 +246,12 @@ def minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     "s:<rep>", which flows through the same window/tile/lane
     #     machinery (its bucket width is the group size, so giant
     #     duplicate clusters still tile).
-    sg = sigs.groupBy(*[f"m{i}" for i in range(NUM_HASHES)]).agg(
-        F.min("doc_id").alias("rep"),
-        F.collect_list("doc_id").alias("members"),
-    )
-
-    # Band-bucket grouping instead of a band self-join: each distinct
-    # sig explodes into LSH_BANDS rows keyed by its band signature;
-    # pairs are enumerated inside the bucket by a vectorized numpy
-    # kernel. Two tricks make this strictly better than the join
-    # formulation:
+    #
+    # Band-bucket grouping instead of a band self-join (the `banded`
+    # stage): each distinct sig explodes into LSH_BANDS rows keyed by
+    # its band signature; pairs are enumerated inside the bucket by a
+    # vectorized numpy kernel. Two tricks make this strictly better
+    # than the join formulation:
     #   1. canonical band: a pair is emitted ONLY by the first band in
     #      which it collides (we hold both full signatures, so earlier
     #      bands are re-checkable locally). Pairs are therefore unique
@@ -262,96 +264,34 @@ def minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bkey(i) = "band:s0:s1:s2:s3" — string keys group identically in
     # Spark's shuffle and in pandas ("s:<rep>" for the same-sig
     # buckets cannot collide with them: band indexes are digits).
-    _ESTRUCT = (
-        "struct<band:int,bkey:string,rep:bigint,members:array<bigint>,k:bigint>"
+    estruct = "struct<band:int,bkey:string,rep:bigint,members:array<bigint>,k:bigint>"
+    band_structs = ", ".join(
+        f"struct({i} AS band, concat_ws(':', {i}, "
+        + ", ".join(f"m{j}" for j in range(i * _ROWS_PER_BAND, (i + 1) * _ROWS_PER_BAND))
+        + ") AS bkey, rep, members, cast(size(members) as bigint) AS k)"
+        for i in range(LSH_BANDS)
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.concat_ws(
-                    ":",
-                    F.lit(i),
-                    *[
-                        F.col(f"m{j}")
-                        for j in range(
-                            i * _ROWS_PER_BAND, (i + 1) * _ROWS_PER_BAND
-                        )
-                    ],
-                ).alias("bkey"),
-                F.col("rep").alias("rep"),
-                F.col("members").alias("members"),
-                F.size("members").cast("long").alias("k"),
-            )
-            for i in range(LSH_BANDS)
-        ]
-    )
-    same_structs = F.when(
-        F.size("members") >= 2,
-        F.expr(
-            "transform(members, d -> named_struct("
-            " 'band', -1,"
-            " 'bkey', concat('s:', cast(rep as string)),"
-            " 'rep', d,"
-            " 'members', array(d),"
-            " 'k', 1L))"
-        ),
-    ).otherwise(F.expr(f"cast(array() as array<{_ESTRUCT}>)"))
-    bands = sg.select(
-        F.explode(F.concat(band_structs, same_structs)).alias("e"),
-        *[f"m{i}" for i in range(NUM_HASHES)],
-    ).select(
-        F.col("e.band").alias("band"),
-        F.col("e.bkey").alias("bkey"),
-        F.col("e.rep").alias("rep"),
-        F.col("e.members").alias("members"),
-        F.col("e.k").alias("k"),
-        *[f"m{i}" for i in range(NUM_HASHES)],
-    )
-    # Bucket SKEW is handled by width-adaptive tiling, not by one task
-    # per bucket: a bucket whose members pair quadratically spreads
-    # over ~(w/T)^2/2 tiles of <= T docs per side. Tile count nc is
-    # derived from the bucket's total MEMBER volume (sum of group
-    # sizes — the same doc-count semantics the pre-collapse pipeline
-    # tiled on; a same-sig bucket's width is its group size), and
-    # member arrays larger than T are SLICED so no single row
-    # concentrates an unbounded expansion in one tile. A band bucket
-    # is pruned unless it holds >= 2 rows (for band buckets: >= 2
-    # distinct sigs — same-sig pairs never come from banding; for
-    # same-sig buckets: their k >= 2 member rows always pass).
-    # Width via window aggs over bkey — one shuffle of the bands table.
-    wspec = Window.partitionBy("bkey")
-    # The k <= T arm wraps without slicing: slice() copies the array
-    # even when it takes the whole of it, and virtually every members
-    # array is far below T.
-    slice_expr = F.when(
-        F.size("members") <= _TILE_DOCS, F.array("members")
-    ).otherwise(
-        F.expr(
-            f"transform(sequence(0, int(ceil(size(members) / {float(_TILE_DOCS)})) - 1),"
-            f" s -> slice(members, s * {_TILE_DOCS} + 1, {_TILE_DOCS}))"
-        )
-    )
-    tiled = (
-        bands.withColumn("n_rows", F.count(F.lit(1)).over(wspec))
-        .withColumn("w", F.sum("k").over(wspec))
-        .filter(F.col("n_rows") >= 2)
-        .withColumn("nc", F.ceil(F.col("w") / F.lit(float(_TILE_DOCS))).cast("int"))
-        .select(
-            "bkey",
-            "band",
-            "rep",
-            "nc",
-            F.posexplode(slice_expr).alias("sidx", "members"),
-            *[f"m{i}" for i in range(NUM_HASHES)],
-        )
-        .withColumn("c", F.pmod(F.xxhash64("rep", "sidx"), F.col("nc")).cast("int"))
-    )
-    # Tile membership as ONE side-tagged frame instead of the former
-    # two-sided cogroup (measured r15: the cogroup machinery alone —
-    # two exchanges, two Arrow streams, one Python invocation per tile
-    # group — cost 2.4s of the 4.5s operator with the kernel stubbed
-    # out). A row in hash-chunk c is
+    # Bucket SKEW is handled by width-adaptive tiling (the `tiled`
+    # stage), not by one task per bucket: a bucket whose members pair
+    # quadratically spreads over ~(w/T)^2/2 tiles of <= T docs per
+    # side. Tile count nc is derived from the bucket's total MEMBER
+    # volume (sum of group sizes — the same doc-count semantics the
+    # pre-collapse pipeline tiled on; a same-sig bucket's width is its
+    # group size), and member arrays larger than T are SLICED so no
+    # single row concentrates an unbounded expansion in one tile. A
+    # band bucket is pruned unless it holds >= 2 rows (for band
+    # buckets: >= 2 distinct sigs — same-sig pairs never come from
+    # banding; for same-sig buckets: their k >= 2 member rows always
+    # pass). Width via window aggs over bkey — one shuffle of the
+    # bands table. The k <= T arm wraps without slicing: slice()
+    # copies the array even when it takes the whole of it, and
+    # virtually every members array is far below T.
+    #
+    # Tile membership as ONE side-tagged frame (the `memb` explode)
+    # instead of the former two-sided cogroup (measured r15: the
+    # cogroup machinery alone — two exchanges, two Arrow streams, one
+    # Python invocation per tile group — cost 2.4s of the 4.5s
+    # operator with the kernel stubbed out). A row in hash-chunk c is
     #   side 0 of the diagonal tile (c, c)      — within-tile i<j pairs
     #   side 1 (the A side) of tiles (c, tj>c)
     #   side 2 (the B side) of tiles (ti<c, c)
@@ -364,41 +304,80 @@ def minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (_kernel_lanes: a lane never owns more than ~_LANE_INPUT_BYTES
     # of source data, so the per-lane pandas frame stays bounded at
     # any corpus size — VERDICT r15 item 1).
-    memb = F.expr(
-        "concat("
-        " array(named_struct('ti', c, 'tj', c, 'side', 0)),"
-        " transform(filter(sequence(0, nc - 1), t -> t > c),"
-        "           t -> named_struct('ti', c, 'tj', t, 'side', 1)),"
-        " transform(filter(sequence(0, nc - 1), t -> t < c),"
-        "           t -> named_struct('ti', t, 'tj', c, 'side', 2)))"
-    )
-    lanes = _kernel_lanes(spark, est_bytes=est_bytes)
-    exploded = tiled.select(
-        "bkey",
-        "band",
-        "rep",
-        "members",
-        F.explode(memb).alias("m"),
-        *[f"m{i}" for i in range(NUM_HASHES)],
-    ).select(
-        "bkey",
-        "band",
-        "rep",
-        "members",
-        F.col("m.ti").alias("ti"),
-        F.col("m.tj").alias("tj"),
-        F.col("m.side").alias("side"),
-        F.pmod(F.xxhash64("bkey", "m.ti", "m.tj"), F.lit(lanes)).alias("lane"),
-        *[f"m{i}" for i in range(NUM_HASHES)],
+    exploded = spark.sql(
+        f"""
+        WITH toks AS (
+          SELECT doc_id, explode(array_distinct({spark_sql_tokens('text')})) AS tok
+          FROM {{docs}}
+        ),
+        hashes AS (SELECT doc_id, {spark_sql_token_hash('tok')} AS h FROM toks),
+        mh AS (SELECT doc_id, array({mins}) AS sig_arr FROM hashes GROUP BY doc_id),
+        sigs AS (SELECT doc_id, {casts} FROM mh),
+        sg AS (
+          SELECT {sig}, min(doc_id) AS rep, collect_list(doc_id) AS members
+          FROM sigs GROUP BY {sig}
+        ),
+        banded AS (
+          SELECT explode(concat(
+                   array({band_structs}),
+                   CASE WHEN size(members) >= 2
+                   THEN transform(members, d -> named_struct(
+                          'band', -1,
+                          'bkey', concat('s:', cast(rep as string)),
+                          'rep', d,
+                          'members', array(d),
+                          'k', 1L))
+                   ELSE cast(array() as array<{estruct}>) END)) AS e,
+                 {sig}
+          FROM sg
+        ),
+        bands AS (
+          SELECT e.band AS band, e.bkey AS bkey, e.rep AS rep,
+                 e.members AS members, e.k AS k, {sig}
+          FROM banded
+        ),
+        widths AS (
+          SELECT *, count(1) OVER (PARTITION BY bkey) AS n_rows,
+                 sum(k) OVER (PARTITION BY bkey) AS w
+          FROM bands
+        ),
+        sliced AS (
+          SELECT bkey, band, rep, nc,
+                 posexplode(CASE WHEN size(members) <= {_TILE_DOCS}
+                   THEN array(members)
+                   ELSE transform(
+                     sequence(0, int(ceil(size(members) / {float(_TILE_DOCS)})) - 1),
+                     s -> slice(members, s * {_TILE_DOCS} + 1, {_TILE_DOCS}))
+                   END) AS (sidx, members),
+                 {sig}
+          FROM (SELECT *, cast(ceil(w / {float(_TILE_DOCS)}D) as int) AS nc
+                FROM widths WHERE n_rows >= 2)
+        ),
+        tiled AS (
+          SELECT *, cast(pmod(xxhash64(rep, sidx), nc) as int) AS c FROM sliced
+        ),
+        memb AS (
+          SELECT bkey, band, rep, members, explode(concat(
+                   array(named_struct('ti', c, 'tj', c, 'side', 0)),
+                   transform(filter(sequence(0, nc - 1), t -> t > c),
+                             t -> named_struct('ti', c, 'tj', t, 'side', 1)),
+                   transform(filter(sequence(0, nc - 1), t -> t < c),
+                             t -> named_struct('ti', t, 'tj', c, 'side', 2)))) AS m,
+                 {sig}
+          FROM tiled
+        )
+        SELECT bkey, band, rep, members, m.ti AS ti, m.tj AS tj, m.side AS side,
+               pmod(xxhash64(bkey, m.ti, m.tj), {lanes}) AS lane, {sig}
+        FROM memb
+        """,
+        docs=docs,
     )
     min_cnt = int(-(-MINHASH_THRESHOLD * NUM_HASHES // 1))
     pairs = exploded.groupBy("lane").applyInPandas(
         _minhash_lane_kernel(min_cnt), schema="doc_a long, doc_b long, cnt int"
     )
-    return pairs.select(
-        "doc_a",
-        "doc_b",
-        F.round(F.col("cnt") / F.lit(float(NUM_HASHES)), 4).alias("est_sim"),
+    return pairs.selectExpr(
+        "doc_a", "doc_b", f"round(cnt / {float(NUM_HASHES)}D, 4) AS est_sim"
     )
 
 
@@ -584,7 +563,7 @@ def _sql_simhash_expr() -> str:
 )
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    est_bytes = _scan_size_bytes(docs)
+    est_bytes = _scan_size_bytes(docs, "documents")
     # weight = occurrence count, summed implicitly: one ±1 contribution
     # per token OCCURRENCE is identical to cnt * ±1 per distinct token,
     # and drops the (doc_id, tok) pre-aggregation shuffle entirely —
@@ -697,12 +676,20 @@ _LANE_INPUT_BYTES = 64 << 20
 _LANE_MAX = 1 << 20
 
 
-def _scan_size_bytes(df: DataFrame) -> int:
+def _scan_size_bytes(df: DataFrame, name: str) -> int:
     """Optimizer size estimate of a frame's source, in bytes (for file
-    scans: the sum of file sizes — exact, no job). 0 when unavailable."""
+    scans: the sum of file sizes — exact, no job). 0 when unavailable,
+    which drops _kernel_lanes' data-volume bound, so that fallback logs
+    a warning naming the frame instead of passing silently."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    except Exception as exc:
+        _log.warning(
+            "no size statistics for %s (%s); kernel lanes fall back to "
+            "the parallelism bound only",
+            name,
+            exc,
+        )
         return 0
 
 

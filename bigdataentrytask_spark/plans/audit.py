@@ -91,6 +91,47 @@ ADJUDICATED = {
 }
 
 
+def audit_operator(
+    spark, name: str, sf_dir: str
+) -> tuple[int, bool, int, list[str]]:
+    """Run one registered operator and read its executed plan:
+    (exchanges, broadcast join?, codegen stages, scanned columns) —
+    one PLANS.md row."""
+    with capture():
+        df = REGISTRY[name](spark, sf_dir)
+        # execute THIS DataFrame's own QueryExecution so AQE
+        # finalizes it (a .write would clone the plan and leave
+        # this one static)
+        df.collect()
+    # An operator that used materialize() returns a LocalRelation.
+    # Substitute the captured inner (executed, AQE-finalized) plan
+    # ONLY when the operator returned that exact local relation —
+    # a composed op that calls a materializing sub-operator but
+    # returns its own lazy frame must be audited as itself
+    # (ADVICE r8 medium), with the sub-operator's executed inner
+    # plans ADDED so its exchange count reflects what actually ran.
+    inner = [lazy for lazy, _local in LAST_MATERIALIZED]
+    for lazy, local in LAST_MATERIALIZED:
+        if df is local:
+            df = lazy
+            inner = [lz for lz, _lc in LAST_MATERIALIZED if lz is not lazy]
+            break
+    cols = plans.scan_columns(df)
+    n_exch = plans.count_exchanges(df)
+    bcast = plans.has_broadcast_join(df)
+    n_codegen = plans.codegen_stage_count(df)
+    for idf in inner:
+        cols.extend(plans.scan_columns(idf))
+        n_exch += plans.count_exchanges(idf)
+        bcast = bcast or plans.has_broadcast_join(idf)
+        n_codegen += plans.codegen_stage_count(idf)
+    # scans hidden inside persisted subtrees don't show in the
+    # formatted explain — recover them from the persisted inputs
+    for pdf in PERSISTED_INPUTS:
+        cols.extend(plans.scan_columns(pdf))
+    return n_exch, bcast, n_codegen, cols
+
+
 def main(sf_dir: str = "/root/testdata/sf0.01", out: str = "PLANS.md") -> None:
     load_all()
     spark = get_spark("plan-audit")
@@ -145,38 +186,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", out: str = "PLANS.md") -> None:
     for name in sorted(REGISTRY):
         if name in SKIP:
             continue
-        with capture():
-            df = REGISTRY[name](spark, sf_dir)
-            # execute THIS DataFrame's own QueryExecution so AQE
-            # finalizes it (a .write would clone the plan and leave
-            # this one static)
-            df.collect()
-        # An operator that used materialize() returns a LocalRelation.
-        # Substitute the captured inner (executed, AQE-finalized) plan
-        # ONLY when the operator returned that exact local relation —
-        # a composed op that calls a materializing sub-operator but
-        # returns its own lazy frame must be audited as itself
-        # (ADVICE r8 medium), with the sub-operator's executed inner
-        # plans ADDED so its exchange count reflects what actually ran.
-        inner = [lazy for lazy, _local in LAST_MATERIALIZED]
-        for lazy, local in LAST_MATERIALIZED:
-            if df is local:
-                df = lazy
-                inner = [lz for lz, _lc in LAST_MATERIALIZED if lz is not lazy]
-                break
-        cols = plans.scan_columns(df)
-        n_exch = plans.count_exchanges(df)
-        bcast = plans.has_broadcast_join(df)
-        n_codegen = plans.codegen_stage_count(df)
-        for idf in inner:
-            cols.extend(plans.scan_columns(idf))
-            n_exch += plans.count_exchanges(idf)
-            bcast = bcast or plans.has_broadcast_join(idf)
-            n_codegen += plans.codegen_stage_count(idf)
-        # scans hidden inside persisted subtrees don't show in the
-        # formatted explain — recover them from the persisted inputs
-        for pdf in PERSISTED_INPUTS:
-            cols.extend(plans.scan_columns(pdf))
+        n_exch, bcast, n_codegen, cols = audit_operator(spark, name, sf_dir)
         col_s = ", ".join(sorted(set(cols)))
         if len(col_s) > 60:
             col_s = col_s[:57] + "..."

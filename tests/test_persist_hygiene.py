@@ -76,6 +76,55 @@ def test_materialize_preserves_schema_and_rows(spark):
     assert sorted(map(tuple, local.collect())) == sorted(map(tuple, df.collect()))
 
 
+def test_materialize_plans_as_local_table_scan(spark):
+    """The rows stay in the JVM: the result is a LocalTableScan, not a
+    Python-backed ExistingRDD scan that forks workers on every action."""
+    from bigdataentrytask_spark.plans import executed_plan
+
+    local = materialize(spark.range(30).selectExpr("id", "id * 2 AS v"))
+    local.write.format("noop").mode("overwrite").save()
+    plan = executed_plan(local)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_materialize_round_trips_types_exactly(spark):
+    df = spark.sql(
+        """
+        SELECT * FROM VALUES
+          (1,
+           CAST('12345678901234567890.123456789012345678' AS DECIMAL(38,18)),
+           TIMESTAMP'2024-03-10 02:30:00.123456',
+           TIMESTAMP_NTZ'1899-12-31 23:59:59.999999',
+           DATE'0001-01-01',
+           X'00FF10',
+           array(named_struct('a', 1, 'b', 'x'), NULL),
+           map('k', 1.5D, 'z', CAST(NULL AS DOUBLE))),
+          (2, NULL, NULL, NULL, NULL, NULL, NULL, NULL)
+        AS t(id, dec, ts, ts_ntz, dt, bin, arr, m)
+        """
+    )
+    local = materialize(df)
+    assert local.schema == df.schema
+    # JVM-side rendering (no Python value conversion in between) and
+    # the Python values must both agree exactly
+    render = [
+        "id",
+        "cast(dec as string)",
+        "cast(ts as string)",
+        "cast(ts_ntz as string)",
+        "cast(dt as string)",
+        "hex(bin)",
+        "cast(arr as string)",
+        "cast(m as string)",
+    ]
+    assert (
+        local.selectExpr(*render).orderBy("id").collect()
+        == df.selectExpr(*render).orderBy("id").collect()
+    )
+    assert local.orderBy("id").collect() == df.orderBy("id").collect()
+
+
 def test_materialize_empty_result(spark):
     df = spark.range(5).filter("id < 0")
     local = materialize(df)
