@@ -29,85 +29,14 @@ load_all()
 
 # Registry emission order — the driver's correctness sweep covers the
 # first 50 entries in dict order, so ordering is part of the contract.
-# Round 2's lesson: a hand-maintained priority list goes stale the
-# moment operators are added, so the order is now DERIVED from the
-# recorded driver results themselves:
+# A hand-maintained priority list goes stale the moment operators are
+# added, so the order is DERIVED from the recorded driver results:
 #   1. red rows first (a prior sweep ran the query and it failed or
 #      crashed the harness — the fix needs a fresh row),
 #   2. then operators with NO row in any CORRECTNESS_r*.json
 #      (never driver-checked), in registry order,
 #   3. then greens, stalest round first (their signal is on file;
 #      re-validation rotates through them as slots allow).
-# _PIN is a manual escape hatch: names listed there go first UNTIL
-# they earn a green row, then expire automatically (so a pin can
-# never re-waste future sweep slots). Round-5 pins (exactly 50): the
-# single round-4 red first (pricing_summary_decimal — the ROUND-ulp
-# decimal artifact, now emitted as scaled BIGINT), then the 12
-# never-checked leftovers (4 parked in round 4 + 8 round-4 late
-# additions), then the 37 round-5 additions. Every name pre-verified
-# via scripts/preverify.py at sf0.01 in a vanilla session.
-# _DEFER is the freeze-respecting counterpart of _PIN (round 6): names
-# listed here are emitted AFTER the stalest greens — they consume NO
-# sweep slots this round even though they are never-checked. Used to
-# stage next-round operators while the current round's slate (the 40
-# round-5b rows + the two VERDICT-requested additions + stale-green
-# refreshes) stays exactly as planned. A deferred name with a driver
-# row (red or green) leaves this list's influence automatically: reds
-# jump to the front, greens rotate — deferral only affects the
-# never-checked. Clear the list at the next round boundary.
-_DEFER: list[str] = [
-    # CLEARED at the round-8 boundary (VERDICT r7 item 1): the 101
-    # round-7 staged operators now queue as ordinary never-checked
-    # entries — round 8's sweep takes the first 50 in registry order,
-    # round 9 the remainder. Registry is FROZEN until the backlog
-    # drains to 0 never-checked (VERDICT r7 item 2); the single
-    # exception is the judge-requested column_profile_drift_approx
-    # twin (VERDICT r7 item 7), pinned below so it earns its green
-    # this round instead of queueing behind the backlog.
-]
-
-_PIN: list[str] = [
-    # round-8: the judge-requested sketch twin (VERDICT r7 item 7) —
-    # pinned so it earns its green row this round instead of queueing
-    # behind the 101-op backlog; expires automatically once green
-    "column_profile_drift_approx",
-    # round-4 red, fixed (scaled-BIGINT output contract)
-    "pricing_summary_decimal",
-    # never-checked backlog (parked + round-4 additions)
-    "language_rebalance_sample", "embedding_pq_assign",
-    "token_feature_hashing", "bpe_pair_counts",
-    "range_interval_join", "seasonal_hourly_baseline",
-    "snapshot_table_diff", "table_checksum",
-    "zorder_locality_stats", "cdc_apply_changelog",
-    "pagerank_step", "incremental_agg_merge",
-    # round-5 additions: SQL scalar surface
-    "date_arithmetic_probe", "regexp_functions_probe",
-    "posexplode_leading_tokens", "ignore_nulls_first_last",
-    "try_arithmetic_probe", "user_peak_hour_cents",
-    # round-5: behavioral analytics
-    "session_bounce_rate", "pareto_revenue_share",
-    "discount_qty_slope", "ks_order_value_segments",
-    "user_activity_entropy", "repeat_purchase_rate",
-    # round-5: statistical time series
-    "hourly_autocorrelation", "cusum_changepoint",
-    "trailing_trend_slope", "holt_linear_forecast",
-    # round-5: warehouse / sampling / windows
-    "scd1_latest_merge", "join_key_skew_stats",
-    "bernoulli_hash_sample", "temporal_sanity_audit",
-    "orders_gap_islands", "lateral_topn_orders",
-    # round-5: graph layer
-    "graph_degree_distribution", "part_pair_triangles",
-    "label_propagation_step",
-    # round-5: text curation + evaluation
-    "tokenizer_compression_ratio", "bigram_lm_logprob",
-    "ngram_containment_pairs", "lang_confusion_matrix",
-    "winnowing_fingerprints", "template_prefix_clusters",
-    "calibration_bins",
-    # round-5: similarity compositions, streaming, multimodal
-    "pairwise_sim_histogram", "neardup_threshold_sweep",
-    "stream_latest_image_merge", "stream_hourly_channel_argmax",
-    "multimodal_patch_grid",
-]
 
 
 def _driver_status(here: str | None = None) -> dict[str, tuple[int, bool]]:
@@ -145,27 +74,13 @@ def _driver_status(here: str | None = None) -> dict[str, tuple[int, bool]]:
 
 def _ordered(mapping: dict) -> dict:
     status = _driver_status()
-    # pins expire once green — they never re-occupy future slots
-    pinned = [
-        n for n in _PIN
-        if n in mapping and not (n in status and status[n][1])
-    ]
-    red = [
-        n for n in mapping
-        if n not in pinned and n in status and not status[n][1]
-    ]
-    unchecked = [n for n in mapping if n not in pinned and n not in status]
-    deferred = [n for n in unchecked if n in _DEFER]
-    unchecked = [n for n in unchecked if n not in _DEFER]
+    red = [n for n in mapping if n in status and not status[n][1]]
+    unchecked = [n for n in mapping if n not in status]
     greens = sorted(
-        (n for n in mapping
-         if n not in pinned and n in status and status[n][1]),
+        (n for n in mapping if n in status and status[n][1]),
         key=lambda n: status[n][0],
     )
-    return {
-        n: mapping[n]
-        for n in (*pinned, *red, *unchecked, *greens, *deferred)
-    }
+    return {n: mapping[n] for n in (*red, *unchecked, *greens)}
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -168,12 +168,8 @@ def operator(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-_ACTIVATED = False
-
-
 def load_all() -> None:
     """Import every operator module so REGISTRY is fully populated."""
-    global _ACTIVATED
     from bigdataentrytask_spark.operators import (  # noqa: F401
         analytics,
         curation,
@@ -196,24 +192,3 @@ def load_all() -> None:
     )
     # evaluation composes other operators' ORACLES — must import last
     from bigdataentrytask_spark.operators import evaluation  # noqa: F401
-
-    # Round-10 activation (VERDICT r9 item 1): the 17 operators staged
-    # during round 9 register through staging.register_all(). The
-    # _ACTIVATED guard is set BEFORE the staging import because
-    # staging.py itself calls load_all() at module top (to guarantee
-    # canonical ORACLE composition order when imported standalone) —
-    # without the guard that reentrant call would hit a half-imported
-    # staging module and die on register_all not existing yet.
-    if not _ACTIVATED:
-        import sys
-
-        mod = sys.modules.get("bigdataentrytask_spark.operators.staging")
-        if mod is not None and not hasattr(mod, "register_all"):
-            # staging itself is mid-import (its top-level load_all()
-            # call landed here); its own module tail finishes the
-            # activation instead — see staging.py's closing block.
-            return
-        _ACTIVATED = True
-        from bigdataentrytask_spark.operators import staging
-
-        staging.register_all()

@@ -7,26 +7,19 @@ item 7 — mechanical, zero behavior change):
                  PQ assignment (the shared machinery).
 * diagnostics  — pair compositions, recall/ndcg eval, bucket balance,
                  matryoshka, drift/variance/isotropy/hubness audits.
-* quantization — round-10/11 staged PQ/HNSW/binary-quant/ADC recall
-                 surface.
-* codebook     — round-12 staged codebook diagnostic chain (cell
-                 balance, Lloyd refinement/convergence, candidate
-                 budgets, seed spread, IVFADC-under-Lloyd).
-* lloyd        — round-13 staged coarse-quantizer (cell-side) Lloyd
-                 chain (split from codebook.py at its round-section
+* quantization — round-10/11 PQ/HNSW/binary-quant/ADC recall surface.
+* codebook     — round-12 codebook diagnostic chain (cell balance,
+                 Lloyd refinement/convergence, candidate budgets,
+                 seed spread, IVFADC-under-Lloyd).
+* lloyd        — round-13 coarse-quantizer (cell-side) Lloyd chain
+                 (split from codebook.py at its round-section
                  boundary — mechanical, zero behavior change).
-* residual     — round-14 staged residual-PQ 2x2 completion (same
-                 split).
-* probes       — round-15 staged probe-schedule / cell-geometry
-                 diagnostics (imported by staging.py directly; not
-                 part of the registered-surface import chain until
-                 activation).
+* residual     — round-14 residual-PQ 2x2 completion (same split).
 
-Submodules import in this exact order so @operator registration order
-(and therefore ORACLES composition order) is byte-identical to the
-former single file. Every top-level name is re-exported here so
-`from bigdataentrytask_spark.operators.similarity import X` keeps
-working for operators, oracles, staged dicts, and constants alike.
+Submodules import in this fixed order: later ones compose earlier
+ones' ORACLES at import time. Every top-level name is re-exported
+here so `from bigdataentrytask_spark.operators.similarity import X`
+keeps working for operators, oracles, and constants alike.
 """
 
 from __future__ import annotations
@@ -106,7 +99,6 @@ from bigdataentrytask_spark.operators.similarity.diagnostics import (  # noqa: F
     _MATRYOSHKA_DIMS,
     _MATRYOSHKA_ORACLE,
     matryoshka_recall_sweep,
-    ROUND10_STAGED,
 )
 
 from bigdataentrytask_spark.operators.similarity.quantization import (  # noqa: F401,E402
@@ -128,7 +120,6 @@ from bigdataentrytask_spark.operators.similarity.quantization import (  # noqa: 
     asymmetric_binary_retrieval,
     _TWO_HOP_ORACLE,
     two_hop_expansion_ceiling,
-    ROUND11_STAGED,
     _pareto_oracle,
     quantization_pareto_table,
     _PROBE_RADII,
@@ -157,14 +148,12 @@ from bigdataentrytask_spark.operators.similarity.codebook import (  # noqa: F401
     pq_lloyd_convergence,
     _IVF_ADC_LLOYD_ORACLE,
     ivf_adc_lloyd_recall,
-    ROUND12_STAGED,
 )
 
 from bigdataentrytask_spark.operators.similarity.lloyd import (  # noqa: F401,E402
     _CELL_PROBES,
     _CELL_LLOYD_ORACLE,
     ivf_cell_lloyd_probe,
-    ROUND13_STAGED,
     _QBP_BUDGETS,
     _QBP_PREFIX,
     _QBP_ORACLE,
@@ -177,7 +166,6 @@ from bigdataentrytask_spark.operators.similarity.lloyd import (  # noqa: F401,E4
 from bigdataentrytask_spark.operators.similarity.residual import (  # noqa: F401,E402
     _IVF_ADC_2X2_ORACLE,
     ivf_adc_refined_joint_recall,
-    ROUND14_STAGED,
     _RPQ_REFINED_ORACLE,
     residual_pq_refined_cells,
     _RESIDUAL_ADC_ORACLE,

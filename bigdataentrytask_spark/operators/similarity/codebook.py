@@ -15,6 +15,7 @@ from bigdataentrytask_spark.functions.vector import (  # noqa: F401
     seq_dot,
     stack_f64,
 )
+from bigdataentrytask_spark.operators import ORACLES as _REG_ORACLES
 from bigdataentrytask_spark.operators import (  # noqa: F401
     materialize,
     operator,
@@ -98,7 +99,6 @@ from bigdataentrytask_spark.operators.similarity.diagnostics import (  # noqa: F
     _MATRYOSHKA_DIMS,
     _MATRYOSHKA_ORACLE,
     matryoshka_recall_sweep,
-    ROUND10_STAGED,
 )
 
 from bigdataentrytask_spark.operators.similarity.quantization import (  # noqa: F401,E501
@@ -120,7 +120,6 @@ from bigdataentrytask_spark.operators.similarity.quantization import (  # noqa: 
     asymmetric_binary_retrieval,
     _TWO_HOP_ORACLE,
     two_hop_expansion_ceiling,
-    ROUND11_STAGED,
     _pareto_oracle,
     quantization_pareto_table,
     _PROBE_RADII,
@@ -134,10 +133,8 @@ from bigdataentrytask_spark.operators.similarity.quantization import (  # noqa: 
 )
 
 
-
 # ==========================================================================
-# ROUND-12 STAGED (VERDICT r10 item 7; zero registry delta until the
-# round-12 boundary). Aggregated by operators/staging.py STAGED.
+# Round-12 additions (VERDICT r10 item 7).
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -188,6 +185,7 @@ _CELL_BALANCE_ORACLE = f"""
     """
 
 
+@operator("ivf_cell_balance_audit", oracle=_CELL_BALANCE_ORACLE)
 def ivf_cell_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell population census of the IVF coarse quantizer (see
     block comment): skew here is the mechanism behind nprobe recall
@@ -408,6 +406,7 @@ _LLOYD_ORACLE = f"""
     """
 
 
+@operator("pq_lloyd_refinement", oracle=_LLOYD_ORACLE)
 def pq_lloyd_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd step on the PQ subspace codebook, priced end-to-end
     (see block comment): distortion, dead codes, and ADC recall for
@@ -738,6 +737,15 @@ _CBR_ORACLE = f"""
     """
 
 
+@operator(
+    "candidate_budget_recall",
+    oracle=(
+        _CBR_ORACLE.replace("{SQL_PLANES}", _sql_planes())
+        .replace("{SQL_CODES}", _SQL_CODES.strip())
+        .replace("{IVF_CTES}", _IVF_CTES)
+        .replace("{KNN_TRUTH}", _REG_ORACLES["knn_bruteforce"])
+    ),
+)
 def candidate_budget_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH vs IVF recall at a FIXED exact-scoring candidate budget
     (see block comment): superset pairs scored once, every
@@ -1003,6 +1011,7 @@ _SEED_SPREAD_ORACLE = f"""
     """
 
 
+@operator("seed_spread_advisor", oracle=_SEED_SPREAD_ORACLE)
 def seed_spread_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-K vs strided-K coarse-quantizer seeding, priced as seed
     spread, assignment distortion, and max cell share (see block
@@ -1207,6 +1216,7 @@ _LLOYD_CONV_ORACLE = f"""
     """
 
 
+@operator("pq_lloyd_convergence", oracle=_LLOYD_CONV_ORACLE)
 def pq_lloyd_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distortion trajectory over _LLOYD_STEPS Lloyd iterations of the
     PQ codebook (see block comment): the diminishing-returns curve."""
@@ -1480,6 +1490,10 @@ _IVF_ADC_LLOYD_ORACLE = f"""
     """
 
 
+@operator(
+    "ivf_adc_lloyd_recall",
+    oracle=_IVF_ADC_LLOYD_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
+)
 def ivf_adc_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC nprobe sweep under the one-Lloyd-step PQ codebook (see
     block comment; plan identical to ivf_adc_recall plus the
@@ -1736,29 +1750,3 @@ def ivf_adc_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("nprobe")
         )
-
-
-from bigdataentrytask_spark.operators import ORACLES as _REG_ORACLES  # noqa: E402
-
-ROUND12_STAGED: dict[str, tuple] = {
-    "ivf_cell_balance_audit": (
-        ivf_cell_balance_audit,
-        _CELL_BALANCE_ORACLE,
-    ),
-    "pq_lloyd_refinement": (pq_lloyd_refinement, _LLOYD_ORACLE),
-    "candidate_budget_recall": (
-        candidate_budget_recall,
-        _CBR_ORACLE.replace("{SQL_PLANES}", _sql_planes())
-        .replace("{SQL_CODES}", _SQL_CODES.strip())
-        .replace("{IVF_CTES}", _IVF_CTES)
-        .replace("{KNN_TRUTH}", _REG_ORACLES["knn_bruteforce"]),
-    ),
-    "seed_spread_advisor": (seed_spread_advisor, _SEED_SPREAD_ORACLE),
-    "pq_lloyd_convergence": (pq_lloyd_convergence, _LLOYD_CONV_ORACLE),
-    "ivf_adc_lloyd_recall": (
-        ivf_adc_lloyd_recall,
-        _IVF_ADC_LLOYD_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
-    ),
-}
-
-

@@ -98,13 +98,11 @@ from bigdataentrytask_spark.operators.similarity.diagnostics import (  # noqa: F
     _MATRYOSHKA_DIMS,
     _MATRYOSHKA_ORACLE,
     matryoshka_recall_sweep,
-    ROUND10_STAGED,
 )
 
 
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (ROADMAP "Retrieval / embeddings"): residual (two-
+# Round-10 addition (ROADMAP "Retrieval / embeddings"): residual (two-
 # level) product quantization. Level 1 = the coarse k-means assignment
 # kmeans_step already verifies (seed convention: first KMEANS_K
 # vectors); level 2 = PQ over the RESIDUAL x - centroid(cell), with
@@ -221,9 +219,10 @@ _RESIDUAL_PQ_ORACLE = f"""
     """
 
 
+@operator("residual_pq_distortion", oracle=_RESIDUAL_PQ_ORACLE)
 def residual_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level (IVF-residual) PQ distortion vs the flat-PQ baseline
-    (see staged block comment). dims and resid are multi-consumer
+    (see block comment). dims and resid are multi-consumer
     fact-scale intermediates -> with_persisted + materialize (the
     sanctioned hygiene pattern; output is 4 domain rows)."""
     from bigdataentrytask_spark.operators import materialize, with_persisted
@@ -351,14 +350,8 @@ def residual_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
 
-ROUND10_STAGED["residual_pq_distortion"] = (
-    residual_pq_distortion,
-    _RESIDUAL_PQ_ORACLE,
-)
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (ROADMAP "Retrieval / embeddings"): HNSW-style
+# Round-10 addition (ROADMAP "Retrieval / embeddings"): HNSW-style
 # layered neighborhood audit — BOUNDED census, not a graph build. Each
 # vector draws a deterministic geometric level (trailing-zero count of
 # an affine hash of vec_id — the arithmetic twin of HNSW's
@@ -456,8 +449,9 @@ _HNSW_AUDIT_ORACLE = f"""
     """
 
 
+@operator("hnsw_layer_audit", oracle=_HNSW_AUDIT_ORACLE)
 def hnsw_layer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layered M-NN neighborhood census (see staged block comment).
+    """Layered M-NN neighborhood census (see block comment).
     mean_radius = per-node MAX top-M distance, summed exactly
     (decimal path), averaged over nodes, one double division chain —
     identical expression order on both sides."""
@@ -560,11 +554,8 @@ def hnsw_layer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("layer")
 
 
-ROUND10_STAGED["hnsw_layer_audit"] = (hnsw_layer_audit, _HNSW_AUDIT_ORACLE)
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): binary (sign)
+# Round-10 addition (round-11 candidate pulled forward): binary (sign)
 # quantization recall — 1 bit per dimension, ranking by ascending
 # Hamming distance between sign vectors, evaluated against the
 # full-precision brute-force truth. Completes the quantization family
@@ -620,9 +611,13 @@ _BINQ_ORACLE = f"""
     """
 
 
+@operator(
+    "binary_quantization_recall",
+    oracle=_BINQ_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
+)
 def binary_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-bit Hamming retrieval vs full-precision truth (see staged
-    block comment)."""
+    """Sign-bit Hamming retrieval vs full-precision truth (see block
+    comment)."""
     e = _emb(spark, sf_dir)
     bit = (F.round(F.col("x") * 1000000).cast("bigint") >= 0).cast("int")
     bits = e.select(
@@ -671,14 +666,8 @@ def binary_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND10_STAGED["binary_quantization_recall"] = (
-    binary_quantization_recall,
-    _BINQ_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-)
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): graph-expansion
+# Round-10 addition (round-11 candidate pulled forward): graph-expansion
 # recall ceiling. Graph-augmented ANN (HNSW/DiskANN's core move) grows
 # the candidate set by walking kNN-graph edges from the hash-bucket
 # seeds; this audit measures exactly what ONE hop buys on this corpus:
@@ -793,8 +782,16 @@ _GRAPH_EXPANSION_ORACLE = f"""
     """
 
 
+@operator(
+    "graph_expansion_recall",
+    oracle=(
+        _GRAPH_EXPANSION_ORACLE.replace("{SQL_PLANES}", _sql_planes())
+        .replace("{SQL_CODES}", _SQL_CODES)
+        .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"])
+    ),
+)
 def graph_expansion_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidates vs 1-hop kNN-graph expansion (see staged block
+    """LSH candidates vs 1-hop kNN-graph expansion (see block
     comment). The dims frame feeds the graph build, the norms, and
     both dot sides -> with_persisted + materialize."""
     from bigdataentrytask_spark.operators import materialize, with_persisted
@@ -936,17 +933,8 @@ def graph_expansion_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
-ROUND10_STAGED["graph_expansion_recall"] = (
-    graph_expansion_recall,
-    _GRAPH_EXPANSION_ORACLE.replace("{SQL_PLANES}", _sql_planes())
-    .replace("{SQL_CODES}", _SQL_CODES)
-    .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-)
-
-
 # ==========================================================================
-# ROUND-11 STAGED (VERDICT r9 item 6; zero registry delta until the
-# round-11 boundary). Aggregated by operators/staging.py STAGED.
+# Round-11 additions (VERDICT r9 item 6).
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -1026,11 +1014,17 @@ _ASYM_BINQ_ORACLE = f"""
     """
 
 
+@operator(
+    "asymmetric_binary_retrieval",
+    oracle=(
+        _ASYM_BINQ_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"])
+    ),
+)
 def asymmetric_binary_retrieval(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Full-precision query vs sign-bit corpus, side-by-side with the
-    symmetric Hamming ranking (see staged block comment). One
+    symmetric Hamming ranking (see block comment). One
     (query, neighbor) aggregation computes BOTH scores; the two
     rankings share it."""
     from bigdataentrytask_spark.operators import materialize, with_persisted
@@ -1228,9 +1222,17 @@ _TWO_HOP_ORACLE = f"""
     """
 
 
+@operator(
+    "two_hop_expansion_ceiling",
+    oracle=(
+        _TWO_HOP_ORACLE.replace("{SQL_PLANES}", _sql_planes())
+        .replace("{SQL_CODES}", _SQL_CODES)
+        .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"])
+    ),
+)
 def two_hop_expansion_ceiling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH -> +1-hop -> +2-hop candidate volume / recall curve (see
-    staged block comment). The dims frame feeds the graph build, the
+    block comment). The dims frame feeds the graph build, the
     norms, and both dot sides -> with_persisted; the kNN graph and the
     frontiers are MATERIALIZED (domain-sized: n*M edges, <= n*queries
     candidate rows) so the quadratic graph build runs exactly once —
@@ -1404,20 +1406,6 @@ def two_hop_expansion_ceiling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
-ROUND11_STAGED: dict[str, tuple] = {
-    "asymmetric_binary_retrieval": (
-        asymmetric_binary_retrieval,
-        _ASYM_BINQ_ORACLE.replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-    ),
-    "two_hop_expansion_ceiling": (
-        two_hop_expansion_ceiling,
-        _TWO_HOP_ORACLE.replace("{SQL_PLANES}", _sql_planes())
-        .replace("{SQL_CODES}", _SQL_CODES)
-        .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-    ),
-}
-
-
 # --------------------------------------------------------------------------
 # Quantization pareto table (ROADMAP round-12, pulled forward): the
 # serving-config decision table — bytes per vector vs recall@5 —
@@ -1456,6 +1444,7 @@ def _pareto_oracle() -> str:
     """
 
 
+@operator("quantization_pareto_table", oracle=_pareto_oracle())
 def quantization_pareto_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bytes/vector vs recall@5 across the verified quantization
     family (see block comment)."""
@@ -1485,12 +1474,6 @@ def quantization_pareto_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         anchor.unionByName(m).unionByName(asym).unionByName(sym)
         .orderBy("config")
     )
-
-
-ROUND11_STAGED["quantization_pareto_table"] = (
-    quantization_pareto_table,
-    _pareto_oracle(),
-)
 
 
 # --------------------------------------------------------------------------
@@ -1584,6 +1567,14 @@ _PROBE_SCHEDULE_ORACLE = f"""
     """
 
 
+@operator(
+    "multiprobe_schedule_advisor",
+    oracle=(
+        _PROBE_SCHEDULE_ORACLE.replace("{SQL_PLANES}", _sql_planes())
+        .replace("{SQL_CODES}", _SQL_CODES)
+        .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"])
+    ),
+)
 def multiprobe_schedule_advisor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1724,14 +1715,6 @@ def multiprobe_schedule_advisor(
         )
 
 
-ROUND11_STAGED["multiprobe_schedule_advisor"] = (
-    multiprobe_schedule_advisor,
-    _PROBE_SCHEDULE_ORACLE.replace("{SQL_PLANES}", _sql_planes())
-    .replace("{SQL_CODES}", _SQL_CODES)
-    .replace("{KNN_TRUTH}", _ORACLES["knn_bruteforce"]),
-)
-
-
 # --------------------------------------------------------------------------
 # PQ asymmetric-distance recall (ROADMAP round-12, pulled forward;
 # completes the quantization family): corpus vectors compress to
@@ -1823,6 +1806,7 @@ _PQ_ADC_ORACLE = f"""
     """
 
 
+@operator("pq_adc_recall", oracle=_PQ_ADC_ORACLE)
 def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ table-lookup (ADC) retrieval vs exact-L2 truth (see block
     comment). The dims frame feeds the assignment, the query side,
@@ -1945,9 +1929,6 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("recall_at_5"),
             )
         )
-
-
-ROUND11_STAGED["pq_adc_recall"] = (pq_adc_recall, _PQ_ADC_ORACLE)
 
 
 # --------------------------------------------------------------------------
@@ -2079,6 +2060,10 @@ _IVF_ADC_ORACLE = f"""
     """
 
 
+@operator(
+    "ivf_adc_recall",
+    oracle=_IVF_ADC_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
+)
 def ivf_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC: coarse cell probe + PQ table-lookup ranking (see block
     comment — one superset ADC pass, nested nprobe levels in one
@@ -2290,10 +2275,3 @@ def ivf_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("nprobe")
         )
-
-
-ROUND11_STAGED["ivf_adc_recall"] = (
-    ivf_adc_recall,
-    _IVF_ADC_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
-)
-

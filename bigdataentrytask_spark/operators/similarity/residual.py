@@ -1,9 +1,8 @@
 """Similarity package: the residual-PQ 2x2 completion — the
-round-14 staged chain (split from codebook.py at its round-section
+round-14 chain (split from codebook.py at its round-section
 boundary; zero behavior change): ivf_adc_refined_joint_recall,
 residual_pq_refined_cells, residual_adc_recall,
-residual_code_utilization, adc_recall_tail and their ROUND14_STAGED
-registration dict."""
+residual_code_utilization, adc_recall_tail."""
 
 from __future__ import annotations
 
@@ -84,8 +83,7 @@ from bigdataentrytask_spark.operators.similarity.codebook import (  # noqa: E402
 )
 
 # ==========================================================================
-# ROUND-14 STAGED (ROADMAP §"Round 14+"; zero registry delta until the
-# round-14 boundary). Aggregated by operators/staging.py STAGED.
+# Round-14 additions (ROADMAP §"Round 14+").
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -261,6 +259,10 @@ _IVF_ADC_2X2_ORACLE = f"""
     """
 
 
+@operator(
+    "ivf_adc_refined_joint_recall",
+    oracle=_IVF_ADC_2X2_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
+)
 def ivf_adc_refined_joint_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -531,14 +533,6 @@ def ivf_adc_refined_joint_recall(
         )
 
 
-ROUND14_STAGED: dict[str, tuple] = {
-    "ivf_adc_refined_joint_recall": (
-        ivf_adc_refined_joint_recall,
-        _IVF_ADC_2X2_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
-    ),
-}
-
-
 # --------------------------------------------------------------------------
 # Residual-PQ under refined cells (ROADMAP round-14 "Retrieval"):
 # residual_pq_distortion pinned an honest NEGATIVE gain — two-level
@@ -711,6 +705,7 @@ _RPQ_REFINED_ORACLE = f"""
     """
 
 
+@operator("residual_pq_refined_cells", oracle=_RPQ_REFINED_ORACLE)
 def residual_pq_refined_cells(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -894,12 +889,6 @@ def residual_pq_refined_cells(
                 )
 
 
-ROUND14_STAGED["residual_pq_refined_cells"] = (
-    residual_pq_refined_cells,
-    _RPQ_REFINED_ORACLE,
-)
-
-
 # --------------------------------------------------------------------------
 # Residual-ADC end-to-end recall — true IVF-PQ (round-15 queue item,
 # pulled forward): residual_pq_refined_cells flipped the DISTORTION
@@ -1046,6 +1035,10 @@ _RESIDUAL_ADC_ORACLE = f"""
     """
 
 
+@operator(
+    "residual_adc_recall",
+    oracle=_RESIDUAL_ADC_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
+)
 def residual_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True IVF-PQ nprobe sweep: refined coarse cells, residual codes,
     asymmetric query-recentered ADC (see block comment)."""
@@ -1287,12 +1280,6 @@ def residual_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
 
-ROUND14_STAGED["residual_adc_recall"] = (
-    residual_adc_recall,
-    _RESIDUAL_ADC_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
-)
-
-
 # --------------------------------------------------------------------------
 # Residual-code utilization audit (round-15 queue item, pulled
 # forward): residual_adc_recall pinned an honest no-gain-on-recall
@@ -1397,6 +1384,10 @@ _RCU_ORACLE = f"""
     """
 
 
+@operator(
+    "residual_code_utilization",
+    oracle=_RCU_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
+)
 def residual_code_utilization(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1529,12 +1520,6 @@ def residual_code_utilization(
                 )
                 .orderBy("codebook", "sub")
             )
-
-
-ROUND14_STAGED["residual_code_utilization"] = (
-    residual_code_utilization,
-    _RCU_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
-)
 
 
 # --------------------------------------------------------------------------
@@ -1761,6 +1746,10 @@ _ART_ORACLE = f"""
     """
 
 
+@operator(
+    "adc_recall_tail",
+    oracle=_ART_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
+)
 def adc_recall_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query hit distribution (min / lower-median / max / mean
     ppm) per (variant, nprobe) for the two refined-cell ADC scorers
@@ -2150,9 +2139,3 @@ def adc_recall_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .orderBy("variant", "nprobe")
             )
-
-
-ROUND14_STAGED["adc_recall_tail"] = (
-    adc_recall_tail,
-    _ART_ORACLE.replace("{IVF_CTES}", _IVF_CTES),
-)

@@ -554,7 +554,7 @@ def bloom_membership_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (registry FROZEN in round 9; natural sibling of the
+# Round-10 addition (registry FROZEN in round 9; natural sibling of the
 # VERDICT-r7-requested column_profile_drift_approx HLL gate): quantile
 # SKETCH gate. Spark's percentile_approx (Greenwald-Khanna/KLL-class
 # mergeable sketch — the only way quantiles exist at 100 TB) is
@@ -603,9 +603,10 @@ _QSKETCH_ORACLE = f"""
     """
 
 
+@operator("column_quantile_sketch_gate", oracle=_QSKETCH_ORACLE)
 def column_quantile_sketch_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percentile_approx contract gate + exact discrete percentiles
-    (see staged block comment). Driver-side composition over bounded
+    (see block comment). Driver-side composition over bounded
     scalars, the cms/bloom sketch-probe pattern."""
     from pyspark.sql import Window
 
@@ -690,12 +691,3 @@ def column_quantile_sketch_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("col_name", "q_pct", "n_rows", "exact_disc", "sketch_ok")
         .orderBy("col_name", "q_pct")
     )
-
-
-# Aggregated by operators/staging.py (round-10 registration).
-ROUND10_STAGED: dict[str, tuple] = {
-    "column_quantile_sketch_gate": (
-        column_quantile_sketch_gate,
-        _QSKETCH_ORACLE,
-    ),
-}

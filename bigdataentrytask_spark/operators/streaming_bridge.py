@@ -14,7 +14,6 @@ from bigdataentrytask_spark.operators import (
     collect_bounded,
     materialize,
     operator,
-    with_persisted,
 )
 from bigdataentrytask_spark.streaming import jobs
 
@@ -835,7 +834,7 @@ def stream_hourly_channel_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (registry FROZEN in round 9 — VERDICT r8 item 2;
+# Round-10 addition (registry FROZEN in round 9 — VERDICT r8 item 2;
 # ROADMAP "Streaming"). Watermark-lag histogram over the replay
 # source: per event, lag = (running max event-time over the ARRIVAL
 # order) - (its own event-time) — the exact quantity Structured
@@ -890,9 +889,10 @@ _WATERMARK_LAG_ORACLE = f"""
     """
 
 
+@operator("watermark_lag_histogram", oracle=_WATERMARK_LAG_ORACLE)
 def watermark_lag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Late-data lag census against the replay watermark (see staged
-    block comment). Loads through the catalog so the events.ts
+    """Late-data lag census against the replay watermark (see block
+    comment). Loads through the catalog so the events.ts
     physical-layout canonicalization applies."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -934,16 +934,8 @@ def watermark_lag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND10_STAGED: dict[str, tuple] = {
-    "watermark_lag_histogram": (
-        watermark_lag_histogram,
-        _WATERMARK_LAG_ORACLE,
-    ),
-}
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): trigger-interval
+# Round-10 addition (round-11 candidate pulled forward): trigger-interval
 # advisor — watermark_lag_histogram's sibling on the THROUGHPUT axis.
 # For candidate processing-time triggers (1m/5m/15m/60m) it buckets
 # the replay stream by event-time window and reports the micro-batch
@@ -981,9 +973,10 @@ _TRIGGER_ADVISOR_ORACLE = f"""
     """
 
 
+@operator("trigger_interval_advisor", oracle=_TRIGGER_ADVISOR_ORACLE)
 def trigger_interval_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Micro-batch size distribution per candidate trigger interval
-    (see staged block comment)."""
+    (see block comment)."""
     from pyspark.sql import functions as F
 
     from bigdataentrytask_spark.catalog import load_table
@@ -1029,14 +1022,8 @@ def trigger_interval_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND10_STAGED["trigger_interval_advisor"] = (
-    trigger_interval_advisor,
-    _TRIGGER_ADVISOR_ORACLE,
-)
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): streaming
+# Round-10 addition (round-11 candidate pulled forward): streaming
 # state-size projection — the MEMORY-capacity sibling of
 # trigger_interval_advisor. A streaming dedup / sessionizer holds one
 # state row per distinct key inside its watermark horizon; this audit
@@ -1108,9 +1095,10 @@ _STATE_PROJECTION_ORACLE = f"""
     """
 
 
+@operator("stream_state_projection", oracle=_STATE_PROJECTION_ORACLE)
 def stream_state_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-window distinct-key census per candidate horizon (see
-    staged block comment for the keyed-explode plan shape)."""
+    block comment for the keyed-explode plan shape)."""
     from pyspark.sql import functions as F
 
     from bigdataentrytask_spark.catalog import load_table
@@ -1170,15 +1158,8 @@ def stream_state_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND10_STAGED["stream_state_projection"] = (
-    stream_state_projection,
-    _STATE_PROJECTION_ORACLE,
-)
-
-
 # ==========================================================================
-# ROUND-11 STAGED (VERDICT r9 item 6; zero registry delta until the
-# round-11 boundary). Aggregated by operators/staging.py STAGED.
+# Round-11 additions (VERDICT r9 item 6).
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -1233,6 +1214,7 @@ _LATENESS_SWEEP_ORACLE = f"""
     """
 
 
+@operator("allowed_lateness_sweep", oracle=_LATENESS_SWEEP_ORACLE)
 def allowed_lateness_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drop-vs-re-emit cost per candidate watermark delay (see block
     comment)."""
@@ -1284,14 +1266,6 @@ def allowed_lateness_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("delay_label")
     )
-
-
-ROUND11_STAGED: dict[str, tuple] = {
-    "allowed_lateness_sweep": (
-        allowed_lateness_sweep,
-        _LATENESS_SWEEP_ORACLE,
-    ),
-}
 
 
 # --------------------------------------------------------------------------
@@ -1354,6 +1328,7 @@ _TRIGGER_LATENESS_ORACLE = f"""
     """
 
 
+@operator("trigger_lateness_joint_cost", oracle=_TRIGGER_LATENESS_ORACLE)
 def trigger_lateness_joint_cost(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1418,12 +1393,6 @@ def trigger_lateness_joint_cost(
         )
         .orderBy("trigger_s", "delay_label")
     )
-
-
-ROUND11_STAGED["trigger_lateness_joint_cost"] = (
-    trigger_lateness_joint_cost,
-    _TRIGGER_LATENESS_ORACLE,
-)
 
 
 # --------------------------------------------------------------------------
@@ -1497,6 +1466,7 @@ _SESSION_STATE_ORACLE = f"""
     """
 
 
+@operator("session_gap_state_cost", oracle=_SESSION_STATE_ORACLE)
 def session_gap_state_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Max-concurrent-session state census per gap candidate (see
     block comment)."""
@@ -1569,15 +1539,8 @@ def session_gap_state_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND11_STAGED["session_gap_state_cost"] = (
-    session_gap_state_cost,
-    _SESSION_STATE_ORACLE,
-)
-
-
 # ==========================================================================
-# ROUND-12 STAGED (VERDICT r10 item 7; zero registry delta until the
-# round-12 boundary). Aggregated by operators/staging.py STAGED.
+# Round-12 additions (VERDICT r10 item 7).
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -1671,6 +1634,7 @@ _BATCH_PEAKS_ORACLE = f"""
     """
 
 
+@operator("session_state_batch_peaks", oracle=_BATCH_PEAKS_ORACLE)
 def session_state_batch_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open-session state sampled at trigger-batch boundaries per
     (gap, trigger) candidate (see block comment)."""
@@ -1854,6 +1818,7 @@ _WM_STATE_ORACLE = f"""
     """
 
 
+@operator("watermark_state_bytes_joint", oracle=_WM_STATE_ORACLE)
 def watermark_state_bytes_joint(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1943,21 +1908,8 @@ def watermark_state_bytes_joint(
     )
 
 
-ROUND12_STAGED: dict[str, tuple] = {
-    "session_state_batch_peaks": (
-        session_state_batch_peaks,
-        _BATCH_PEAKS_ORACLE,
-    ),
-    "watermark_state_bytes_joint": (
-        watermark_state_bytes_joint,
-        _WM_STATE_ORACLE,
-    ),
-}
-
-
 # ==========================================================================
-# ROUND-13 STAGED (VERDICT r11 item 6; zero registry delta until the
-# round-13 boundary). Aggregated by operators/staging.py STAGED.
+# Round-13 additions (VERDICT r11 item 6).
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -2060,6 +2012,7 @@ _DEDUP_TTL_ORACLE = f"""
     """
 
 
+@operator("dedup_ttl_state_projection", oracle=_DEDUP_TTL_ORACLE)
 def dedup_ttl_state_projection(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2288,6 +2241,7 @@ _THREEWAY_ORACLE = f"""
     """
 
 
+@operator("state_sizing_threeway", oracle=_THREEWAY_ORACLE)
 def state_sizing_threeway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Joint session-store + window-store state sampled on one
     trigger grid per (gap, trigger, delay): marginal sampled peaks,
@@ -2575,6 +2529,7 @@ def _fixed_ttl_kernel(ttls_s: list[int]):
     return kernel
 
 
+@operator("dedup_ttl_fixed_twin", oracle=_DEDUP_FIXED_ORACLE)
 def dedup_ttl_fixed_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-TTL (first-seen-anchored, no refresh) streaming-dedup
     state/leakage frontier per TTL candidate (see block comment:
@@ -2642,25 +2597,8 @@ def dedup_ttl_fixed_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND13_STAGED: dict[str, tuple] = {
-    "dedup_ttl_state_projection": (
-        dedup_ttl_state_projection,
-        _DEDUP_TTL_ORACLE,
-    ),
-    "dedup_ttl_fixed_twin": (
-        dedup_ttl_fixed_twin,
-        _DEDUP_FIXED_ORACLE,
-    ),
-    "state_sizing_threeway": (
-        state_sizing_threeway,
-        _THREEWAY_ORACLE,
-    ),
-}
-
-
 # ==========================================================================
-# ROUND-14 STAGED (ROADMAP §"Round 14+"; zero registry delta until the
-# round-14 boundary). Aggregated by operators/staging.py STAGED.
+# Round-14 additions (ROADMAP §"Round 14+").
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -2811,6 +2749,7 @@ _TTL_JOINT_ORACLE = f"""
     """
 
 
+@operator("dedup_ttl_policy_joint", oracle=_TTL_JOINT_ORACLE)
 def dedup_ttl_policy_joint(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2974,14 +2913,6 @@ def dedup_ttl_policy_joint(
     )
 
 
-ROUND14_STAGED: dict[str, tuple] = {
-    "dedup_ttl_policy_joint": (
-        dedup_ttl_policy_joint,
-        _TTL_JOINT_ORACLE,
-    ),
-}
-
-
 # --------------------------------------------------------------------------
 # Trigger sampling-deficit audit (round-15 queue item, pulled
 # forward): dedup_ttl_policy_joint's staged test pinned a real gap —
@@ -3100,6 +3031,7 @@ _TSD_ORACLE = f"""
     """
 
 
+@operator("trigger_sampling_deficit", oracle=_TSD_ORACLE)
 def trigger_sampling_deficit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3225,493 +3157,3 @@ def trigger_sampling_deficit(
         )
         .orderBy("ttl_s", "trigger_s", "policy")
     )
-
-
-ROUND14_STAGED["trigger_sampling_deficit"] = (
-    trigger_sampling_deficit,
-    _TSD_ORACLE,
-)
-
-
-# ==========================================================================
-# ROUND-15 STAGED (ROADMAP §"Round 15+"; zero registry delta until the
-# round-15 boundary). Aggregated by operators/staging.py STAGED.
-# ==========================================================================
-
-# --------------------------------------------------------------------------
-# Deficit-vs-cost frontier (ROADMAP round-15 "Streaming"):
-# trigger_sampling_deficit prices the trigger as a measurement-error
-# knob; this op closes the loop it motivates by joining that error
-# to what the monitoring actually COSTS — the number of trigger
-# ticks a metrics pipeline evaluates over the store's whole lifetime
-# span. Per (ttl_s, policy, trigger_s) on an op-local 4-point
-# trigger grid (60 s .. 3600 s, wider than the parent's 2-point
-# grid so the frontier has shape): the tick count (n_batches), the
-# continuous and sampled peaks, the deficit in keys and ppm, and a
-# dominated flag computed WITHIN each (ttl, policy) across triggers
-# (dominated iff some other trigger costs <= ticks AND misses <=
-# keys, one strict — with monotone deficit and strictly decreasing
-# tick counts this marks exactly the coarser-trigger-same-deficit
-# rows, so the frontier is the cheapest trigger per distinct
-# deficit level).
-# Pinned regime (staged test): deficit_keys is non-decreasing and
-# n_batches strictly decreasing in trigger_s per (ttl, policy);
-# every (ttl, policy) keeps >= 1 undominated row; and wherever two
-# adjacent triggers tie on deficit the finer one is dominated —
-# monitoring resolution beyond the store's own variability is free
-# to give up.
-# Exact math: integer microseconds; interval-cover maxima; tick
-# counts by integer floor-div; the one ppm rounding.
-# Scale: the parent ops' interval frames re-used (islands window +
-# the per-user batched kernel walk); ticks per combo are O(span /
-# trigger) integers; the frontier flag is a |triggers|-sized
-# self-join per (ttl, policy).
-# --------------------------------------------------------------------------
-_DCF_TRIGGERS_S = [60, 300, 900, 3600]
-
-# The shared interval/peak/tick CTE chain — one source of truth for
-# deficit_cost_frontier AND deficit_knee_advisor (the ADVICE r13
-# factoring lesson applied at birth). Ends at the m(...) metric CTE.
-_DCF_CTES = f"""ev AS (
-      SELECT user_id, event_type, event_id, epoch_us(ts) AS t
-      FROM events
-    ),
-    ttl(ttl_s) AS (VALUES
-      {", ".join(f"({s})" for s in _DEDUP_TTL_CANDS_S)}),
-    tr(trigger_s) AS (VALUES
-      {", ".join(f"({t})" for t in _DCF_TRIGGERS_S)}),
-    lagged AS (
-      SELECT ttl.ttl_s, e.user_id, e.event_type, e.t, e.event_id,
-             LAG(e.t) OVER (PARTITION BY ttl.ttl_s, e.user_id,
-                                         e.event_type
-                            ORDER BY e.t, e.event_id) AS prev_t
-      FROM ev e CROSS JOIN ttl
-    ),
-    isl AS (
-      SELECT ttl_s, user_id, event_type, t,
-             SUM(CASE WHEN prev_t IS NULL
-                       OR t - prev_t > CAST(ttl_s AS BIGINT) * 1000000
-                      THEN 1 ELSE 0 END)
-               OVER (PARTITION BY ttl_s, user_id, event_type
-                     ORDER BY t, event_id) AS aid
-      FROM lagged
-    ),
-    occ AS (
-      SELECT ttl.ttl_s, e.user_id, e.event_type, e.t,
-             ROW_NUMBER() OVER (PARTITION BY ttl.ttl_s, e.user_id,
-                                             e.event_type
-                                ORDER BY e.t, e.event_id) AS rn
-      FROM ev e CROSS JOIN ttl
-    ),
-    walk AS (
-      SELECT ttl_s, user_id, event_type, rn, t AS cur_admit,
-             TRUE AS admitted
-      FROM occ WHERE rn = 1
-      UNION ALL
-      SELECT o.ttl_s, o.user_id, o.event_type, o.rn,
-             CASE WHEN o.t - w.cur_admit
-                       > CAST(o.ttl_s AS BIGINT) * 1000000
-                  THEN o.t ELSE w.cur_admit END,
-             o.t - w.cur_admit > CAST(o.ttl_s AS BIGINT) * 1000000
-      FROM walk w
-      JOIN occ o ON o.ttl_s = w.ttl_s AND o.user_id = w.user_id
-                AND o.event_type = w.event_type AND o.rn = w.rn + 1
-    ),
-    iv AS (
-      SELECT 'a_sliding' AS policy, ttl_s, MIN(t) AS t0,
-             MAX(t) + CAST(ttl_s AS BIGINT) * 1000000 AS t_end
-      FROM isl GROUP BY ttl_s, user_id, event_type, aid
-      UNION ALL
-      SELECT 'b_fixed', ttl_s, cur_admit,
-             cur_admit + CAST(ttl_s AS BIGINT) * 1000000
-      FROM walk WHERE admitted
-    ),
-    pts AS (
-      SELECT policy, ttl_s, t0 AS t, 1 AS delta FROM iv
-      UNION ALL
-      SELECT policy, ttl_s, t_end, -1 FROM iv
-    ),
-    cont AS (
-      SELECT policy, ttl_s, CAST(MAX(open_now) AS BIGINT) AS cont_peak
-      FROM (
-        SELECT policy, ttl_s,
-               SUM(delta) OVER (PARTITION BY policy, ttl_s
-                                ORDER BY t, delta
-                                ROWS UNBOUNDED PRECEDING) AS open_now
-        FROM pts
-      ) GROUP BY 1, 2
-    ),
-    hits AS (
-      SELECT i.policy, i.ttl_s, tr.trigger_s, u.g,
-             CAST(COUNT(*) AS BIGINT) AS rows_at
-      FROM iv i CROSS JOIN tr, LATERAL unnest(range(
-        (i.t0 + CAST(tr.trigger_s AS BIGINT) * 1000000 - 1) // (CAST(tr.trigger_s AS BIGINT) * 1000000),
-        (i.t_end - 1) // (CAST(tr.trigger_s AS BIGINT) * 1000000) + 1)) AS u(g)
-      GROUP BY 1, 2, 3, 4
-    ),
-    samp AS (
-      SELECT policy, ttl_s, trigger_s,
-             CAST(MAX(rows_at) AS BIGINT) AS sampled_peak
-      FROM hits GROUP BY 1, 2, 3
-    ),
-    bspan AS (
-      SELECT policy, ttl_s, MIN(t0) AS mn, MAX(t_end - 1) AS mx
-      FROM iv GROUP BY 1, 2
-    ),
-    nb AS (
-      SELECT b.policy, b.ttl_s, tr.trigger_s,
-             CAST(GREATEST(
-               b.mx // (CAST(tr.trigger_s AS BIGINT) * 1000000)
-               - (b.mn + CAST(tr.trigger_s AS BIGINT) * 1000000 - 1)
-                 // (CAST(tr.trigger_s AS BIGINT) * 1000000) + 1, 0) AS BIGINT)
-               AS n_batches
-      FROM bspan b CROSS JOIN tr
-    ),
-    m AS (
-      SELECT s.ttl_s, s.policy, s.trigger_s,
-             nb.n_batches, c.cont_peak,
-             s.sampled_peak,
-             c.cont_peak - s.sampled_peak AS deficit_keys
-      FROM samp s
-      JOIN cont c ON c.policy = s.policy AND c.ttl_s = s.ttl_s
-      JOIN nb ON nb.policy = s.policy AND nb.ttl_s = s.ttl_s
-             AND nb.trigger_s = s.trigger_s
-    )"""
-
-_DCF_ORACLE = f"""
-    WITH RECURSIVE {_DCF_CTES}
-    SELECT CAST(m.ttl_s AS BIGINT) AS ttl_s, m.policy,
-           CAST(m.trigger_s AS BIGINT) AS trigger_s,
-           m.n_batches,
-           m.cont_peak AS cont_peak_keys,
-           m.sampled_peak AS sampled_peak_keys,
-           m.deficit_keys,
-           CAST(ROUND(m.deficit_keys * 1000000.0 / m.cont_peak)
-                AS BIGINT) AS deficit_ppm,
-           (SELECT COUNT(*) FROM m o
-            WHERE o.ttl_s = m.ttl_s AND o.policy = m.policy
-              AND o.n_batches <= m.n_batches
-              AND o.deficit_keys <= m.deficit_keys
-              AND (o.n_batches < m.n_batches
-                   OR o.deficit_keys < m.deficit_keys)) > 0
-             AS dominated
-    FROM m
-    ORDER BY ttl_s, policy, trigger_s
-    """
-
-
-def deficit_cost_frontier(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Monitoring error (sampling deficit) vs monitoring cost
-    (trigger ticks over the store's lifetime span) per (ttl, policy,
-    trigger), with within-group pareto-dominance flags (see block
-    comment)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from bigdataentrytask_spark.catalog import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "event_id",
-        F.unix_micros("ts").alias("t"),
-    )
-    ttl = spark.createDataFrame(
-        [(s,) for s in _DEDUP_TTL_CANDS_S], "ttl_s long"
-    )
-    tr = spark.createDataFrame(
-        [(t,) for t in _DCF_TRIGGERS_S], "trigger_s long"
-    )
-    wl = Window.partitionBy("ttl_s", "user_id", "event_type").orderBy(
-        "t", "event_id"
-    )
-    isl = (
-        ev.crossJoin(F.broadcast(ttl))
-        .withColumn("prev_t", F.lag("t").over(wl))
-        .withColumn(
-            "aid",
-            F.sum(
-                F.when(
-                    F.col("prev_t").isNull()
-                    | (
-                        F.col("t") - F.col("prev_t")
-                        > F.col("ttl_s") * 1_000_000
-                    ),
-                    1,
-                ).otherwise(0)
-            ).over(wl),
-        )
-    )
-    sl = (
-        isl.groupBy("ttl_s", "user_id", "event_type", "aid")
-        .agg(
-            F.min("t").alias("t0"),
-            (F.max("t") + F.col("ttl_s") * 1_000_000).alias("t_end"),
-        )
-        .select(F.lit("a_sliding").alias("policy"), "ttl_s", "t0", "t_end")
-    )
-    fx = (
-        ev.groupBy("user_id")
-        .applyInPandas(
-            _fixed_ttl_kernel(_DEDUP_TTL_CANDS_S),
-            schema="ttl_s long, user_id long, event_type string, t0 long",
-        )
-        .select(
-            F.lit("b_fixed").alias("policy"),
-            "ttl_s",
-            "t0",
-            (F.col("t0") + F.col("ttl_s") * 1_000_000).alias("t_end"),
-        )
-    )
-    iv = sl.unionByName(fx)
-    with with_persisted(iv) as iv_p:
-        pts = iv_p.select(
-            "policy", "ttl_s", F.col("t0").alias("t"),
-            F.lit(1).alias("delta"),
-        ).unionByName(
-            iv_p.select(
-                "policy",
-                "ttl_s",
-                F.col("t_end").alias("t"),
-                F.lit(-1).alias("delta"),
-            )
-        )
-        ws = Window.partitionBy("policy", "ttl_s").orderBy(
-            "t", "delta"
-        ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        cont = (
-            pts.select(
-                "policy", "ttl_s",
-                F.sum("delta").over(ws).alias("open_now"),
-            )
-            .groupBy("policy", "ttl_s")
-            .agg(F.max("open_now").cast("bigint").alias("cont_peak"))
-        )
-        p_us = F.col("trigger_s") * 1_000_000
-        g_lo = F.floor((F.col("t0") + p_us - 1) / p_us)
-        g_hi = F.floor((F.col("t_end") - 1) / p_us)
-        samp = (
-            iv_p.crossJoin(F.broadcast(tr))
-            .select(
-                "policy",
-                "ttl_s",
-                "trigger_s",
-                F.explode(
-                    F.when(
-                        g_hi >= g_lo, F.sequence(g_lo, g_hi)
-                    ).otherwise(
-                        F.expr("CAST(array() AS array<bigint>)")
-                    )
-                ).alias("g"),
-            )
-            .groupBy("policy", "ttl_s", "trigger_s", "g")
-            .agg(F.count(F.lit(1)).alias("rows_at"))
-            .groupBy("policy", "ttl_s", "trigger_s")
-            .agg(F.max("rows_at").cast("bigint").alias("sampled_peak"))
-        )
-        nb = (
-            iv_p.groupBy("policy", "ttl_s")
-            .agg(
-                F.min("t0").alias("mn"),
-                F.max(F.col("t_end") - 1).alias("mx"),
-            )
-            .crossJoin(F.broadcast(tr))
-            .select(
-                "policy",
-                "ttl_s",
-                "trigger_s",
-                F.greatest(
-                    F.floor(F.col("mx") / p_us)
-                    - F.floor((F.col("mn") + p_us - 1) / p_us)
-                    + 1,
-                    F.lit(0),
-                )
-                .cast("bigint")
-                .alias("n_batches"),
-            )
-        )
-        m = (
-            samp.join(cont, ["policy", "ttl_s"])
-            .join(nb, ["policy", "ttl_s", "trigger_s"])
-            .select(
-                "ttl_s",
-                "policy",
-                "trigger_s",
-                "n_batches",
-                F.col("cont_peak").alias("cont_peak_keys"),
-                F.col("sampled_peak").alias("sampled_peak_keys"),
-                (F.col("cont_peak") - F.col("sampled_peak")).alias(
-                    "deficit_keys"
-                ),
-            )
-        )
-        o = m.select(
-            F.col("ttl_s").alias("o_ttl"),
-            F.col("policy").alias("o_pol"),
-            F.col("n_batches").alias("o_nb"),
-            F.col("deficit_keys").alias("o_dk"),
-        )
-        dom = (
-            m.join(
-                F.broadcast(o),
-                (F.col("o_ttl") == F.col("ttl_s"))
-                & (F.col("o_pol") == F.col("policy"))
-                & (F.col("o_nb") <= F.col("n_batches"))
-                & (F.col("o_dk") <= F.col("deficit_keys"))
-                & (
-                    (F.col("o_nb") < F.col("n_batches"))
-                    | (F.col("o_dk") < F.col("deficit_keys"))
-                ),
-                "left",
-            )
-            .groupBy(
-                "ttl_s",
-                "policy",
-                "trigger_s",
-                "n_batches",
-                "cont_peak_keys",
-                "sampled_peak_keys",
-                "deficit_keys",
-            )
-            .agg(
-                F.sum(
-                    F.when(F.col("o_nb").isNotNull(), 1).otherwise(0)
-                ).alias("n_dom")
-            )
-        )
-        out = dom.select(
-            F.col("ttl_s").cast("bigint").alias("ttl_s"),
-            "policy",
-            F.col("trigger_s").cast("bigint").alias("trigger_s"),
-            "n_batches",
-            "cont_peak_keys",
-            "sampled_peak_keys",
-            "deficit_keys",
-            F.round(
-                F.col("deficit_keys") * 1000000.0
-                / F.col("cont_peak_keys")
-            )
-            .cast("bigint")
-            .alias("deficit_ppm"),
-            (F.col("n_dom") > 0).alias("dominated"),
-        ).orderBy("ttl_s", "policy", "trigger_s")
-        return materialize(out)
-
-
-ROUND15_STAGED: dict[str, tuple] = {
-    "deficit_cost_frontier": (deficit_cost_frontier, _DCF_ORACLE),
-}
-
-
-# --------------------------------------------------------------------------
-# Frontier knee advisor (ROADMAP round-16 "Streaming", pulled
-# forward): deficit_cost_frontier prices every (trigger) point; the
-# monitoring owner needs ONE row per (ttl, policy) — the KNEE: the
-# coarsest trigger whose sampled peak still equals the continuous
-# peak (deficit 0), i.e. the cheapest monitoring that is still
-# exact. Reported per (ttl, policy): the knee trigger (NULL when no
-# swept trigger is exact — the honest outcome for ttl=1800 on this
-# corpus, where the continuous peak lives between even the 60 s
-# ticks), the tick bill at the knee, the 60 s-baseline bill, and the
-# saving in ppm. Composes the frontier op directly (the
-# compaction_policy_pareto composition pattern): Spark reduces the
-# parent's frame; the oracle shares the parent's CTE chain via
-# _DCF_CTES — one source of truth for the interval machinery
-# (ADVICE r13's factoring lesson applied at birth).
-# Pinned regime (staged test, the honest asymmetry): exact
-# monitoring is mostly NOT free on this corpus — per (ttl, policy)
-# the knee either does not exist (ttl=1800: the continuous peak
-# lives between even 60 s ticks for BOTH stores) or sits at the
-# finest swept trigger (savings 0). The one real knee is the FIXED
-# store at ttl=7200 (knee 3600 s, savings 983355 ppm): anchored
-# intervals align the peak onto coarse ticks, while the sliding
-# store's refreshed tails keep its peak between them — the policy
-# choice, not the trigger, decides whether cheap-and-exact
-# monitoring exists. Knee rows agree pointwise with the parent
-# (deficit 0 at the knee; NULL knee iff the group has no deficit-0
-# row).
-# Exact math: integer ticks; one ppm rounding.
-# Scale: the parent's plan + a |ttl|x|policy|-sized reduction.
-# --------------------------------------------------------------------------
-_DKA_ORACLE = f"""
-    WITH RECURSIVE {{DCF_CTES}},
-    base AS (
-      SELECT ttl_s, policy, n_batches AS baseline_batches
-      FROM m WHERE trigger_s = {_DCF_TRIGGERS_S[0]}
-    ),
-    kn AS (
-      SELECT ttl_s, policy,
-             MAX(trigger_s) AS knee_trigger_s
-      FROM m WHERE deficit_keys = 0
-      GROUP BY 1, 2
-    ),
-    knb AS (
-      SELECT k.ttl_s, k.policy, k.knee_trigger_s,
-             mm.n_batches AS knee_batches
-      FROM kn k
-      JOIN m mm ON mm.ttl_s = k.ttl_s AND mm.policy = k.policy
-               AND mm.trigger_s = k.knee_trigger_s
-    )
-    SELECT CAST(b.ttl_s AS BIGINT) AS ttl_s, b.policy,
-           CAST(kb.knee_trigger_s AS BIGINT) AS knee_trigger_s,
-           kb.knee_batches,
-           b.baseline_batches,
-           CAST(ROUND((b.baseline_batches - kb.knee_batches)
-                      * 1000000.0 / b.baseline_batches) AS BIGINT)
-             AS savings_ppm
-    FROM base b
-    LEFT JOIN knb kb ON kb.ttl_s = b.ttl_s AND kb.policy = b.policy
-    ORDER BY b.ttl_s, b.policy
-    """
-
-
-def deficit_knee_advisor(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """One row per (ttl, policy): the coarsest still-exact monitoring
-    trigger, its tick bill, and the saving vs the 60 s baseline
-    (composes deficit_cost_frontier; see block comment)."""
-    from pyspark.sql import functions as F
-
-    dcf = deficit_cost_frontier(spark, sf_dir)
-    base = dcf.filter(
-        F.col("trigger_s") == _DCF_TRIGGERS_S[0]
-    ).select("ttl_s", "policy", F.col("n_batches").alias("baseline_batches"))
-    kn = (
-        dcf.filter(F.col("deficit_keys") == 0)
-        .groupBy("ttl_s", "policy")
-        .agg(F.max("trigger_s").alias("knee_trigger_s"))
-    )
-    knb = kn.join(
-        dcf.select(
-            "ttl_s",
-            "policy",
-            F.col("trigger_s").alias("knee_trigger_s"),
-            F.col("n_batches").alias("knee_batches"),
-        ),
-        ["ttl_s", "policy", "knee_trigger_s"],
-    )
-    return (
-        base.join(knb, ["ttl_s", "policy"], "left")
-        .select(
-            F.col("ttl_s").cast("bigint").alias("ttl_s"),
-            "policy",
-            F.col("knee_trigger_s").cast("bigint").alias("knee_trigger_s"),
-            "knee_batches",
-            "baseline_batches",
-            F.round(
-                (F.col("baseline_batches") - F.col("knee_batches"))
-                * 1000000.0
-                / F.col("baseline_batches")
-            )
-            .cast("bigint")
-            .alias("savings_ppm"),
-        )
-        .orderBy("ttl_s", "policy")
-    )
-
-
-ROUND15_STAGED["deficit_knee_advisor"] = (
-    deficit_knee_advisor,
-    _DKA_ORACLE.replace("{DCF_CTES}", _DCF_CTES),
-)

@@ -1651,7 +1651,7 @@ def dedup_then_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): boilerplate
+# Round-10 addition (round-11 candidate pulled forward): boilerplate
 # chunk census. Crawled corpora carry repeated headers/footers; the
 # standard detector is "does a document's LEADING (or TRAILING)
 # fixed-size chunk hash-match another document of the same source?".
@@ -1704,9 +1704,10 @@ _BOILERPLATE_ORACLE = f"""
     """
 
 
+@operator("boilerplate_chunk_census", oracle=_BOILERPLATE_ORACLE)
 def boilerplate_chunk_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared leading/trailing chunk share per source (see staged
-    block comment)."""
+    """Shared leading/trailing chunk share per source (see block
+    comment)."""
     w = _docs(spark, sf_dir).select(
         "doc_id", "source", F.split("text", " ").alias("ws")
     )
@@ -1751,5 +1752,3 @@ def boilerplate_chunk_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("tail_share_ppm"),
     ).orderBy("source")
-
-

@@ -12,17 +12,16 @@ r12 item 5 / r13 item 3 — mechanical, zero behavior change):
                join maintenance, FD audits, sort-order advisor.
 * layout     — the round-10/11/12 physical-layout advisor surface
                (encodings, ranged sort, bucketing, partition sizing,
-               compaction planning/pruning/floor sweep) and their
-               ROUND10/11/12_STAGED dicts.
+               compaction planning/pruning/floor sweep).
 * compaction — the round-13/14 compaction-economics chain (workload-
                weighted sort, write amp, schedule amortizer, read
-               bill, policy Pareto) and ROUND13/14_STAGED.
+               bill, policy Pareto).
 
-Submodules import in this exact order so @operator registration
-order (and therefore ORACLES composition order) is byte-identical to
-the former single file. Every top-level name is re-exported here so
+Submodules import in this fixed order: later ones compose earlier
+ones' ORACLES and helpers at import time. Every top-level name is
+re-exported here so
 `from bigdataentrytask_spark.operators.warehouse import X` keeps
-working for operators, oracles, staged dicts, and constants alike.
+working for operators, oracles, and constants alike.
 """
 
 from __future__ import annotations
@@ -117,7 +116,6 @@ from bigdataentrytask_spark.operators.warehouse.audits import (  # noqa: F401,E4
 )
 
 from bigdataentrytask_spark.operators.warehouse.layout import (  # noqa: F401,E402
-    ROUND10_STAGED,
     _DICT_COLS,
     _ceil_log2_case,
     _dict_advisor_oracle,
@@ -132,7 +130,6 @@ from bigdataentrytask_spark.operators.warehouse.layout import (  # noqa: F401,E4
     _PART_MIN_ROWS,
     _PART_ADVISOR_ORACLE,
     partition_size_advisor,
-    ROUND11_STAGED,
     _COMPACT_TARGET_ROWS,
     _COMPACTION_ORACLE,
     compaction_planner,
@@ -151,7 +148,6 @@ from bigdataentrytask_spark.operators.warehouse.layout import (  # noqa: F401,E4
     _CFS_FLOORS,
     _CFS_ORACLE,
     compaction_floor_sweep,
-    ROUND12_STAGED,
 )
 
 from bigdataentrytask_spark.operators.warehouse.compaction import (  # noqa: F401,E402
@@ -160,17 +156,10 @@ from bigdataentrytask_spark.operators.warehouse.compaction import (  # noqa: F40
     workload_weighted_sort_advisor,
     _CWA_ORACLE,
     compaction_write_amp,
-    ROUND13_STAGED,
     _CSA_ORACLE,
     compaction_schedule_amortizer,
-    ROUND14_STAGED,
     _CRB_ORACLE,
     compaction_read_bill,
     _CPP_ORACLE,
     compaction_policy_pareto,
-    _CFT_SCALES,
-    _CFT_ORACLE,
-    compaction_face_transfer,
-    ROUND15_STAGED,
 )
-

@@ -1,11 +1,10 @@
 """Warehouse package, segment 3 of 4 (former warehouse.py lines
 3788-5078, split mechanically at section boundaries — zero behavior
-change): the physical-layout advisor surface staged in rounds 10-12
+change): the physical-layout advisor surface added in rounds 10-12
 (dictionary/RLE encoding advisors, ranged sort advisor, bucketed
 join planning, partition-size advisor, compaction planner,
 bucket-sort joint advisor, compacted zone pruning, sort-key benefit
-ranking, compaction floor sweep) and their ROUND10/11/12_STAGED
-registration dicts."""
+ranking, compaction floor sweep)."""
 
 from __future__ import annotations
 
@@ -19,20 +18,10 @@ from bigdataentrytask_spark.session import ensure_session_confs
 from bigdataentrytask_spark.operators.warehouse.core import (  # noqa: E402
     _t,
 )
-from bigdataentrytask_spark.operators.warehouse.audits import (  # noqa: E402
-    _SORT_ADVISOR_ORACLE,
-    sort_order_advisor,
-)
-
-# Aggregated by operators/staging.py; registered at the round-10
-# boundary (zero registry delta until then).
-ROUND10_STAGED: dict[str, tuple] = {
-    "sort_order_advisor": (sort_order_advisor, _SORT_ADVISOR_ORACLE),
-}
 
 
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED: dictionary-encoding advisor — the storage-layout
+# Round-10 addition: dictionary-encoding advisor — the storage-layout
 # planning table complementing sort_order_advisor (ordering) and
 # zone_map_skipping (pruning). For each candidate VARCHAR column it
 # compares the plain-encoding byte cost (sum of value lengths) against
@@ -106,9 +95,10 @@ def _dict_advisor_oracle() -> str:
     """
 
 
+@operator("dict_encoding_advisor", oracle=_dict_advisor_oracle())
 def dict_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plain-vs-dictionary byte costs per candidate column (see staged
-    block comment). The Spark side evaluates the SAME generated
+    """Plain-vs-dictionary byte costs per candidate column (see block
+    comment). The Spark side evaluates the SAME generated
     ceil-log2 CASE chain via selectExpr."""
     frames = []
     for t, c in _DICT_COLS:
@@ -146,14 +136,8 @@ def dict_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROUND10_STAGED["dict_encoding_advisor"] = (
-    dict_encoding_advisor,
-    _dict_advisor_oracle(),
-)
-
-
 # --------------------------------------------------------------------------
-# ROUND-10 STAGED (round-11 candidate pulled forward): RLE vs
+# Round-10 addition (round-11 candidate pulled forward): RLE vs
 # bit-packing advisor — composes sort_order_advisor's run counts with
 # dict_encoding_advisor's generated ceil-log2 index width. Under the
 # CANDIDATE sort (shipdate-first total order, where runs are longest)
@@ -206,9 +190,10 @@ def _rle_advisor_oracle() -> str:
     """
 
 
+@operator("rle_bitpack_advisor", oracle=_rle_advisor_oracle())
 def rle_bitpack_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RLE vs flat bit-packing byte costs per column under the
-    shipdate sort (see staged block comment)."""
+    shipdate sort (see block comment)."""
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate",
         "l_suppkey", "l_returnflag",
@@ -257,15 +242,8 @@ def rle_bitpack_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("col_name")
 
 
-ROUND10_STAGED["rle_bitpack_advisor"] = (
-    rle_bitpack_advisor,
-    _rle_advisor_oracle(),
-)
-
-
 # ==========================================================================
-# ROUND-11 STAGED (VERDICT r9 item 6; zero registry delta until the
-# round-11 boundary). Aggregated by operators/staging.py STAGED.
+# Round-11 additions (VERDICT r9 item 6).
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -320,6 +298,7 @@ _SORT_ADVISOR_RANGED_ORACLE = """
     """
 
 
+@operator("sort_order_advisor_ranged", oracle=_SORT_ADVISOR_RANGED_ORACLE)
 def sort_order_advisor_ranged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-range-partition run statistics under the shipdate candidate
     sort (see block comment: the production variant of
@@ -427,6 +406,7 @@ _BUCKET_PLANNING_ORACLE = f"""
     """
 
 
+@operator("bucketed_join_planning", oracle=_BUCKET_PLANNING_ORACLE)
 def bucketed_join_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-candidate-bucket-count stats for the lineitem JOIN orders
     key (see block comment). One pass per side: the candidate list is
@@ -520,6 +500,7 @@ _PART_ADVISOR_ORACLE = f"""
     """
 
 
+@operator("partition_size_advisor", oracle=_PART_ADVISOR_ORACLE)
 def partition_size_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-count / size / skew table per candidate partition
     column of orders (see block comment)."""
@@ -567,22 +548,6 @@ def partition_size_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("candidate")
     )
-
-
-ROUND11_STAGED: dict[str, tuple] = {
-    "sort_order_advisor_ranged": (
-        sort_order_advisor_ranged,
-        _SORT_ADVISOR_RANGED_ORACLE,
-    ),
-    "bucketed_join_planning": (
-        bucketed_join_planning,
-        _BUCKET_PLANNING_ORACLE,
-    ),
-    "partition_size_advisor": (
-        partition_size_advisor,
-        _PART_ADVISOR_ORACLE,
-    ),
-}
 
 
 # --------------------------------------------------------------------------
@@ -635,6 +600,7 @@ _COMPACTION_ORACLE = f"""
     """
 
 
+@operator("compaction_planner", oracle=_COMPACTION_ORACLE)
 def compaction_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge schedule for the month(o_orderdate) partitioning (see
     block comment: deterministic prefix-sum bin-packing)."""
@@ -684,12 +650,6 @@ def compaction_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("group_id")
     )
-
-
-ROUND11_STAGED["compaction_planner"] = (
-    compaction_planner,
-    _COMPACTION_ORACLE,
-)
 
 
 # --------------------------------------------------------------------------
@@ -744,6 +704,7 @@ _BS_JOINT_ORACLE = f"""
     """
 
 
+@operator("bucket_sort_joint_advisor", oracle=_BS_JOINT_ORACLE)
 def bucket_sort_joint_advisor(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -803,15 +764,8 @@ def bucket_sort_joint_advisor(
     )
 
 
-ROUND11_STAGED["bucket_sort_joint_advisor"] = (
-    bucket_sort_joint_advisor,
-    _BS_JOINT_ORACLE,
-)
-
-
 # ==========================================================================
-# ROUND-12 STAGED (VERDICT r10 item 7; zero registry delta until the
-# round-12 boundary). Aggregated by operators/staging.py STAGED.
+# Round-12 additions (VERDICT r10 item 7).
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -901,6 +855,7 @@ _CZP_ORACLE = f"""
     """
 
 
+@operator("compacted_zone_pruning", oracle=_CZP_ORACLE)
 def compacted_zone_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read-amplification of the compacted month layout vs the
     per-month layout for a fixed day-granularity predicate set (see
@@ -1073,6 +1028,7 @@ _SKB_ORACLE = f"""
     """
 
 
+@operator("sort_key_benefit_ranking", oracle=_SKB_ORACLE)
 def sort_key_benefit_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map prune fraction per candidate sort key against a fixed
     reference predicate workload, ranked (see block comment)."""
@@ -1220,6 +1176,7 @@ _CFS_ORACLE = f"""
     """
 
 
+@operator("compaction_floor_sweep", oracle=_CFS_ORACLE)
 def compaction_floor_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files-vs-read-amp frontier across candidate compaction
     floors (see block comment; schedule rule = compaction_planner's
@@ -1300,18 +1257,3 @@ def compaction_floor_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("floor_rows", "pred_id")
     )
-
-
-ROUND12_STAGED: dict[str, tuple] = {
-    "compacted_zone_pruning": (compacted_zone_pruning, _CZP_ORACLE),
-    "sort_key_benefit_ranking": (
-        sort_key_benefit_ranking,
-        _SKB_ORACLE,
-    ),
-    "compaction_floor_sweep": (
-        compaction_floor_sweep,
-        _CFS_ORACLE,
-    ),
-}
-
-

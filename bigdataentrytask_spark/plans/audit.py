@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import sys
 
+from pyspark.sql import DataFrame
+
 from bigdataentrytask_spark import plans
 from bigdataentrytask_spark.operators import (
     LAST_MATERIALIZED,
@@ -91,6 +93,16 @@ ADJUDICATED = {
 }
 
 
+def unwrap_materialized(df: DataFrame) -> DataFrame:
+    """The lazy plan behind ``df`` when ``df`` is the local relation a
+    ``materialize()`` call returned inside the enclosing ``capture()``
+    scope; any other frame comes back unchanged."""
+    for lazy, local in LAST_MATERIALIZED:
+        if df is local:
+            return lazy
+    return df
+
+
 def audit_operator(
     spark, name: str, sf_dir: str
 ) -> tuple[int, bool, int, list[str]]:
@@ -111,11 +123,10 @@ def audit_operator(
     # (ADVICE r8 medium), with the sub-operator's executed inner
     # plans ADDED so its exchange count reflects what actually ran.
     inner = [lazy for lazy, _local in LAST_MATERIALIZED]
-    for lazy, local in LAST_MATERIALIZED:
-        if df is local:
-            df = lazy
-            inner = [lz for lz, _lc in LAST_MATERIALIZED if lz is not lazy]
-            break
+    lazy = unwrap_materialized(df)
+    if lazy is not df:
+        df = lazy
+        inner = [lz for lz in inner if lz is not lazy]
     cols = plans.scan_columns(df)
     n_exch = plans.count_exchanges(df)
     bcast = plans.has_broadcast_join(df)

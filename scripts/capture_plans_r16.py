@@ -4,12 +4,8 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bigdataentrytask_spark.operators import (
-    LAST_MATERIALIZED,
-    REGISTRY,
-    capture,
-    load_all,
-)
+from bigdataentrytask_spark.operators import REGISTRY, capture, load_all
+from bigdataentrytask_spark.plans.audit import unwrap_materialized
 from bigdataentrytask_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -33,11 +29,7 @@ def main():
         # r15 capture wrote 8-line ExistingRDD stubs for those ops
         # (VERDICT r15 note 5).
         with capture():
-            df = REGISTRY[name](spark, SF_DIR)
-        for lazy, local in LAST_MATERIALIZED:
-            if df is local:
-                df = lazy
-                break
+            df = unwrap_materialized(REGISTRY[name](spark, SF_DIR))
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"

@@ -5,10 +5,6 @@ canonicalization probe that crashes on non-hashable columns exactly like the
 driver's canonicalizer does).
 
 Usage:  python scripts/preverify.py [name ...]
-        python scripts/preverify.py --staged      # the PENDING staged set
-                                                  # (operators/staging.py
-                                                  # STAGED) — the pre-
-                                                  # registration gate
         python scripts/preverify.py --never       # ops with no CORRECTNESS row yet
         python scripts/preverify.py --sweep [N]   # first N (default 50) in
                                                   # queries() order — the driver's
@@ -97,9 +93,6 @@ def canon_probe(pdf: pd.DataFrame, name: str) -> None:
 
 def main(argv: list[str]) -> int:
     names = argv
-    staged_mode = bool(names) and names[0] == "--staged"
-    if staged_mode:
-        names = names[1:]
     if names and names[0] == "--sweep":
         n = int(names[1]) if len(names) > 1 else 50
         names = list(e.queries())[:n]
@@ -115,13 +108,7 @@ def main(argv: list[str]) -> int:
             with open(p) as fh:
                 checked |= set(json.load(fh))
         names = [q for q in e.queries() if q not in checked]
-    if staged_mode:
-        from bigdataentrytask_spark.operators.staging import STAGED
-
-        qs = {k: v[0] for k, v in STAGED.items()}
-        osql = {k: v[1] for k, v in STAGED.items()}
-    else:
-        qs, osql = e.queries(), e.oracle_sql()
+    qs, osql = e.queries(), e.oracle_sql()
     if not names:
         names = list(qs)
     unknown = [n for n in names if n not in qs]

@@ -19,17 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdataentrytask_spark.operators import REGISTRY, load_all
-
-
-def _resolve(name):
-    """Registered ops first; PENDING staged ops (not yet in the
-    registry) resolve through staging.STAGED so the stress gates
-    run before activation."""
-    if name in REGISTRY:
-        return REGISTRY[name]
-    from bigdataentrytask_spark.operators.staging import STAGED
-    return STAGED[name][0]
-
 from bigdataentrytask_spark.session import get_spark
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -102,7 +91,7 @@ def main(argv: list[str]) -> None:
     REGISTRY["doc_fingerprint"](spark, DST).count()
     for name in names:
         t0 = time.time()
-        n = _resolve(name)(spark, DST).count()
+        n = REGISTRY[name](spark, DST).count()
         print(f"STRESS8X {name}: {n} rows in {time.time() - t0:.2f}s")
 
 

@@ -46,19 +46,6 @@ def test_ordering_red_then_unchecked_then_stale_greens(tmp_path,
     assert ordered == ["r1", "u1", "u2", "g_old", "g_new"]
 
 
-def test_deferred_unchecked_go_last_until_checked(tmp_path, monkeypatch):
-    """_DEFER stages next-round operators without consuming sweep
-    slots: a deferred never-checked name sorts after every green; a
-    driver row (red or green) removes the deferral's influence."""
-    _write(tmp_path, 1, {"g": GREEN, "d_red": RED})
-    monkeypatch.setattr(entry, "_HERE", str(tmp_path))
-    monkeypatch.setattr(entry, "_DEFER", ["d_new", "d_red"])
-    mapping = {"d_new": 1, "u1": 2, "g": 3, "d_red": 4}
-    ordered = list(entry._ordered(mapping))
-    # d_red HAS a row (red) -> front as usual; d_new defers past greens
-    assert ordered == ["d_red", "u1", "g", "d_new"]
-
-
 def test_malformed_file_is_ignored(tmp_path):
     (tmp_path / "CORRECTNESS_r01.json").write_text("{not json")
     assert entry._driver_status(str(tmp_path)) == {}

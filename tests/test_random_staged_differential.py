@@ -1,9 +1,10 @@
-"""Random-INPUT oracle differential for the staged set: generate
-randomized tables (shapes the fixture never produces — empty texts,
-single-word docs, duplicate-heavy corpora, tiny dimensions, skewed
-sources) and run each staged operator against its own DuckDB oracle
-on that data. The per-round preverify only exercises the fixed
-corpus; this is the same differential on adversarial inputs.
+"""Random-INPUT oracle differential for the round-10..14 operator
+slates: generate randomized tables (shapes the fixture never produces
+— empty texts, single-word docs, duplicate-heavy corpora, tiny
+dimensions, skewed sources) and run each operator against its own
+DuckDB oracle on that data. The per-round preverify only exercises
+the fixed corpus; this is the same differential on adversarial
+inputs.
 """
 
 from __future__ import annotations
@@ -16,32 +17,15 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from bigdataentrytask_spark.operators.staging import (
-    ROUND10_ACTIVATED,
-    ROUND11_ACTIVATED,
-    ROUND12_ACTIVATED,
-    ROUND13_ACTIVATED,
-    ROUND14_ACTIVATED,
-    STAGED as _PENDING,
-)
-
-# every staged-then-activated generation + the pending set — all go
-# through the same adversarial-input differential (activation must
-# not silently drop an op out of this suite)
-STAGED = {
-    **ROUND10_ACTIVATED,
-    **ROUND11_ACTIVATED,
-    **ROUND12_ACTIVATED,
-    **ROUND13_ACTIVATED,
-    **ROUND14_ACTIVATED,
-    **_PENDING,
-}
+from bigdataentrytask_spark.operators import ORACLES, REGISTRY, load_all
 
 from .conftest import assert_matches_oracle
 
 # Staged-slate suite: excluded from the default driver gate (see
 # pytest.ini); run with `pytest -m slow`.
 pytestmark = pytest.mark.slow
+
+load_all()
 
 SEEDS = [0, 1]
 
@@ -163,7 +147,91 @@ def _gen_tables(seed: int) -> dict[str, pd.DataFrame]:
 
 
 # ops whose oracle/operator only touch the generated tables
-RANDOMIZABLE = sorted(STAGED)
+RANDOMIZABLE = (
+    "adc_recall_tail",
+    "allowed_lateness_sweep",
+    "asymmetric_binary_retrieval",
+    "binary_quantization_recall",
+    "boilerplate_chunk_census",
+    "bucket_sort_joint_advisor",
+    "bucketed_join_planning",
+    "candidate_budget_recall",
+    "chunk_decay_source_mix",
+    "column_quantile_sketch_gate",
+    "compacted_zone_pruning",
+    "compaction_floor_sweep",
+    "compaction_planner",
+    "compaction_policy_pareto",
+    "compaction_read_bill",
+    "compaction_schedule_amortizer",
+    "compaction_write_amp",
+    "contamination_source_crosstab",
+    "cross_source_duplicate_flow",
+    "crosslingual_neardup_eval",
+    "dedup_order_sensitivity",
+    "dedup_quality_survivorship",
+    "dedup_ttl_fixed_twin",
+    "dedup_ttl_policy_joint",
+    "dedup_ttl_state_projection",
+    "dict_encoding_advisor",
+    "domain_mix_planner",
+    "duplicate_decay_mixture",
+    "funnel_order_sensitivity",
+    "funnel_threshold_provenance",
+    "gate_stacking_ledger",
+    "graph_expansion_recall",
+    "hnsw_layer_audit",
+    "intra_doc_repetition_audit",
+    "ivf_adc_lloyd_recall",
+    "ivf_adc_recall",
+    "ivf_adc_refined_joint_recall",
+    "ivf_cell_balance_audit",
+    "ivf_cell_lloyd_convergence",
+    "ivf_cell_lloyd_probe",
+    "length_truncation_audit",
+    "lsh_band_width_sweep",
+    "matryoshka_recall_sweep",
+    "multiprobe_schedule_advisor",
+    "pack_length_sweep",
+    "pack_padding_sweep",
+    "partition_size_advisor",
+    "perplexity_gate_by_lang",
+    "perplexity_pruning_gate",
+    "post_gate_mix_rebalance",
+    "pq_adc_recall",
+    "pq_lloyd_convergence",
+    "pq_lloyd_refinement",
+    "quality_prune_mix_shift",
+    "quality_pruning_curve",
+    "quality_threshold_pruning",
+    "quantization_budget_pareto",
+    "quantization_pareto_table",
+    "residual_adc_recall",
+    "residual_code_utilization",
+    "residual_pq_distortion",
+    "residual_pq_refined_cells",
+    "rle_bitpack_advisor",
+    "seed_spread_advisor",
+    "session_gap_state_cost",
+    "session_state_batch_peaks",
+    "shard_mix_uniformity",
+    "shard_stratified_twin",
+    "sort_key_benefit_ranking",
+    "sort_order_advisor",
+    "sort_order_advisor_ranged",
+    "state_sizing_threeway",
+    "stream_state_projection",
+    "substring_dedup_audit",
+    "substring_dedup_prod",
+    "trigger_interval_advisor",
+    "trigger_lateness_joint_cost",
+    "trigger_sampling_deficit",
+    "two_hop_expansion_ceiling",
+    "url_host_frontier_stats",
+    "watermark_lag_histogram",
+    "watermark_state_bytes_joint",
+    "workload_weighted_sort_advisor",
+)
 
 
 # physical types the catalog's enforced read schemas expect
@@ -208,5 +276,5 @@ def random_sf(request, spark, tmp_path_factory):
 @pytest.mark.parametrize("name", RANDOMIZABLE)
 def test_staged_on_random_inputs(random_sf, spark, name):
     sf, con = random_sf
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     assert_matches_oracle(fn(spark, sf), con, osql, f"{name}@{sf}")

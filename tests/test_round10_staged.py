@@ -1,8 +1,6 @@
-"""Round-11 staged operators (VERDICT r9 item 6): implemented and
-differential-tested DURING round 10; ACTIVATED at the round-11
-boundary (VERDICT r10 item 1 — registry 432 -> 454) via
-staging.register_all(), per CONTRIBUTING.md §"Staging operators
-during a registry freeze".
+"""Round-11 operator slate (VERDICT r9 item 6): the 22 operators
+added during round 10, each with its oracle differential and
+per-operator invariants.
 
 Differentials go through DuckDB's PANDAS path with the dtype check
 (the preverify gate) so the HUGEINT class is covered before any op
@@ -13,10 +11,7 @@ from __future__ import annotations
 
 import pytest
 
-from bigdataentrytask_spark.operators import REGISTRY, load_all
-from bigdataentrytask_spark.operators.staging import (
-    ROUND11_ACTIVATED as STAGED,
-)
+from bigdataentrytask_spark.operators import ORACLES, REGISTRY, load_all
 
 from .conftest import SF_DIR, assert_matches_oracle
 
@@ -26,29 +21,42 @@ pytestmark = pytest.mark.slow
 
 load_all()
 
-STAGED_NAMES = sorted(STAGED)
-
-
-def test_round11_activation_complete():
-    """VERDICT r10 item 1: the 22 round-10-staged operators are LIVE —
-    register_all() covers ROUND11_ACTIVATED; the registry stands at
-    498 after the round-14 activation, and every staged name resolves to its staged function object
-    (not a shadowing duplicate)."""
-    assert len(STAGED) == 22
-    assert len(REGISTRY) == 498
-    for name, (fn, _osql) in STAGED.items():
-        assert REGISTRY[name] is fn
+STAGED_NAMES = (
+    "allowed_lateness_sweep",
+    "asymmetric_binary_retrieval",
+    "bucket_sort_joint_advisor",
+    "bucketed_join_planning",
+    "compaction_planner",
+    "contamination_source_crosstab",
+    "cross_source_duplicate_flow",
+    "dedup_order_sensitivity",
+    "domain_mix_planner",
+    "intra_doc_repetition_audit",
+    "ivf_adc_recall",
+    "multiprobe_schedule_advisor",
+    "partition_size_advisor",
+    "pq_adc_recall",
+    "quality_pruning_curve",
+    "quality_threshold_pruning",
+    "quantization_pareto_table",
+    "session_gap_state_cost",
+    "sort_order_advisor_ranged",
+    "substring_dedup_prod",
+    "trigger_lateness_joint_cost",
+    "two_hop_expansion_ceiling",
+)
 
 
 def test_round11_staged_all_have_oracles():
-    for name, (fn, osql) in STAGED.items():
+    for name in STAGED_NAMES:
+        fn, osql = REGISTRY[name], ORACLES[name]
         assert callable(fn) and isinstance(osql, str) and "SELECT" in osql
         assert "{" not in osql, f"{name}: unexpanded template in oracle"
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_matches_oracle(spark, duck, name):
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     assert_matches_oracle(fn(spark, SF_DIR), duck, osql, name)
 
 
@@ -57,7 +65,7 @@ def test_staged_pandas_dtype_parity(spark, duck, name):
     """The preverify gate: DuckDB's pandas fetch must not coerce an
     integral column to float64 (HUGEINT fingerprint) while the Spark
     side stays integral."""
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     spdf = fn(spark, SF_DIR).toPandas()
     odf = duck.execute(osql).fetch_df()
     assert sorted(spdf.columns) == sorted(odf.columns)
@@ -83,7 +91,7 @@ def test_substring_prod_equals_audit_twin(spark):
 
 
 def test_dedup_order_sensitivity_partition(spark):
-    fn, _ = STAGED["dedup_order_sensitivity"]
+    fn = REGISTRY["dedup_order_sensitivity"]
     row = fn(spark, SF_DIR).toPandas().iloc[0]
     assert row.n_keeper_same + row.n_keeper_diff == row.n_texts
     assert row.n_dup_groups <= row.n_texts <= row.n_docs
@@ -113,7 +121,7 @@ def test_dedup_order_sensitivity_nonzero_drift(spark, tmp_path):
     spark.createDataFrame(pdf).write.mode("overwrite").parquet(
         f"{sf}/documents.parquet"
     )
-    fn, _ = STAGED["dedup_order_sensitivity"]
+    fn = REGISTRY["dedup_order_sensitivity"]
     row = fn(spark, sf).toPandas().iloc[0]
     assert row.n_texts == 3 and row.n_docs == 5 and row.n_dup_groups == 2
     # group "the same text": id policy -> 1, source policy -> 2 (diff)
@@ -122,7 +130,7 @@ def test_dedup_order_sensitivity_nonzero_drift(spark, tmp_path):
 
 
 def test_contamination_crosstab_invariants(spark):
-    fn, _ = STAGED["contamination_source_crosstab"]
+    fn = REGISTRY["contamination_source_crosstab"]
     pdf = fn(spark, SF_DIR).toPandas()
     # every surviving source appears with both eval sets
     assert (pdf.groupby("source").size() == 2).all()
@@ -137,7 +145,7 @@ def test_asymmetric_beats_symmetric_here(spark):
     sign-bit corpus) must recover recall over symmetric Hamming on
     this corpus — a sign flip means the corpus regen changed regime,
     worth knowing (the residual_pq honest-pin pattern)."""
-    fn, _ = STAGED["asymmetric_binary_retrieval"]
+    fn = REGISTRY["asymmetric_binary_retrieval"]
     row = fn(spark, SF_DIR).toPandas().iloc[0]
     assert row.n_hits_asym >= row.n_hits_sym
     assert row.n_hits_asym <= row.n_queries * 5
@@ -148,7 +156,7 @@ def test_two_hop_curve_monotone(spark):
     """Candidate supersets: volumes grow by construction, and recall
     cannot drop (a candidate displacing a truth hit from the exact-
     cosine top-5 must itself rank in the global top-5, i.e. be truth)."""
-    fn, _ = STAGED["two_hop_expansion_ceiling"]
+    fn = REGISTRY["two_hop_expansion_ceiling"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("stage")
     a, b, c = (
         pdf.loc["a_lsh"], pdf.loc["b_1hop"], pdf.loc["c_2hop"]
@@ -161,10 +169,8 @@ def test_two_hop_curve_monotone(spark):
 def test_ranged_advisor_brackets_global(spark):
     """The documented error bound: per-range run counts equal the
     global count plus at most one extra run per range boundary."""
-    from bigdataentrytask_spark.operators.staging import ROUND10_ACTIVATED
-
-    g_fn, _ = ROUND10_ACTIVATED["sort_order_advisor"]
-    r_fn, _ = STAGED["sort_order_advisor_ranged"]
+    g_fn = REGISTRY["sort_order_advisor"]
+    r_fn = REGISTRY["sort_order_advisor_ranged"]
     g = (
         g_fn(spark, SF_DIR)
         .toPandas()
@@ -179,7 +185,7 @@ def test_ranged_advisor_brackets_global(spark):
 
 
 def test_bucket_planning_invariants(spark):
-    fn, _ = STAGED["bucketed_join_planning"]
+    fn = REGISTRY["bucketed_join_planning"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert pdf.li_rows.nunique() == 1  # row counts don't depend on B
     assert pdf.ord_rows.nunique() == 1
@@ -192,7 +198,7 @@ def test_bucket_planning_invariants(spark):
 
 
 def test_partition_advisor_invariants(spark):
-    fn, _ = STAGED["partition_size_advisor"]
+    fn = REGISTRY["partition_size_advisor"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("candidate")
     assert pdf.total_rows.nunique() == 1
     assert (pdf.min_rows <= pdf.max_rows).all()
@@ -202,7 +208,7 @@ def test_partition_advisor_invariants(spark):
 
 
 def test_intra_doc_repetition_invariants(spark):
-    fn, _ = STAGED["intra_doc_repetition_audit"]
+    fn = REGISTRY["intra_doc_repetition_audit"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert (pdf.mean_rep_ppm <= pdf.max_rep_ppm).all()
     assert (pdf.max_rep_ppm <= 1_000_000).all()
@@ -210,7 +216,7 @@ def test_intra_doc_repetition_invariants(spark):
 
 
 def test_domain_mix_invariants(spark):
-    fn, _ = STAGED["domain_mix_planner"]
+    fn = REGISTRY["domain_mix_planner"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert abs(pdf.token_share_ppm.sum() - 1_000_000) <= len(pdf)
     assert (pdf.uniform_weight_ppm <= 4_000_000).all()
@@ -221,7 +227,7 @@ def test_domain_mix_invariants(spark):
 
 
 def test_lateness_sweep_monotone(spark):
-    fn, _ = STAGED["allowed_lateness_sweep"]
+    fn = REGISTRY["allowed_lateness_sweep"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("delay_us")
     # drops fall and re-emits rise as the delay grows
     assert pdf.n_dropped.is_monotonic_decreasing
@@ -237,7 +243,7 @@ def test_lateness_sweep_monotone(spark):
 
 
 def test_pruning_curve_monotone(spark):
-    fn, _ = STAGED["quality_pruning_curve"]
+    fn = REGISTRY["quality_pruning_curve"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("drop_frac_ppm")
     assert pdf.n_docs_kept.is_monotonic_decreasing
     assert pdf.tokens_kept.is_monotonic_decreasing
@@ -254,10 +260,10 @@ def test_threshold_pruning_gates_and_consistency(spark, duck):
     exact columns must agree with the exact curve: the exact kept
     count at cut f can exceed the nominal cut only by threshold
     ties."""
-    fn, _ = STAGED["quality_threshold_pruning"]
+    fn = REGISTRY["quality_threshold_pruning"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("drop_frac_ppm")
     assert pdf.sketch_rank_ok.all() and pdf.kept_gap_ok.all()
-    curve_fn, _ = STAGED["quality_pruning_curve"]
+    curve_fn = REGISTRY["quality_pruning_curve"]
     curve = curve_fn(spark, SF_DIR).toPandas().set_index("drop_frac_ppm")
     for f in pdf.index:
         nominal = pdf.loc[f, "n_total"] - (pdf.loc[f, "n_total"] * f) // 1_000_000
@@ -267,7 +273,7 @@ def test_threshold_pruning_gates_and_consistency(spark, duck):
 
 
 def test_cross_source_flow_invariants(spark):
-    fn, _ = STAGED["cross_source_duplicate_flow"]
+    fn = REGISTRY["cross_source_duplicate_flow"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert len(pdf) > 0  # chunk granularity must carry content at sf0.01
     assert (pdf.src_lo < pdf.src_hi).all()
@@ -276,7 +282,7 @@ def test_cross_source_flow_invariants(spark):
 
 
 def test_trigger_lateness_joint_invariants(spark):
-    fn, _ = STAGED["trigger_lateness_joint_cost"]
+    fn = REGISTRY["trigger_lateness_joint_cost"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert (pdf.total_emits >= pdf.n_windows).all()
     assert (pdf.re_emits == pdf.total_emits - pdf.n_windows).all()
@@ -296,7 +302,7 @@ def test_trigger_lateness_joint_invariants(spark):
 
 
 def test_compaction_planner_invariants(spark, duck):
-    fn, _ = STAGED["compaction_planner"]
+    fn = REGISTRY["compaction_planner"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("group_id").reset_index(
         drop=True
     )
@@ -320,7 +326,7 @@ def test_compaction_planner_invariants(spark, duck):
 def test_pareto_table_consistency(spark):
     """The pareto rows must equal their source operators' numbers and
     be self-consistent (the full-precision anchor dominates)."""
-    fn, _ = STAGED["quantization_pareto_table"]
+    fn = REGISTRY["quantization_pareto_table"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("config")
     assert pdf.loc["a_full_f32", "recall_at_5"] == 1.0
     assert (pdf.recall_at_5 <= 1.0).all()
@@ -329,8 +335,7 @@ def test_pareto_table_consistency(spark):
         pdf.loc["c_binary_asym", "recall_at_5"]
         >= pdf.loc["d_binary_sym", "recall_at_5"]
     )
-    from bigdataentrytask_spark.operators.staging import ROUND10_ACTIVATED
-    m_fn, _ = ROUND10_ACTIVATED["matryoshka_recall_sweep"]
+    m_fn = REGISTRY["matryoshka_recall_sweep"]
     m = m_fn(spark, SF_DIR).toPandas().set_index("d_prefix")
     for d in (8, 16, 32):
         assert (
@@ -343,12 +348,12 @@ def test_probe_schedule_monotone(spark):
     """Nested radii: volume and recall can only grow with the probe
     radius; radius 0 must equal the plain LSH bucket recall (same
     candidate set as graph-expansion stage a)."""
-    fn, _ = STAGED["multiprobe_schedule_advisor"]
+    fn = REGISTRY["multiprobe_schedule_advisor"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("probe_radius")
     assert pdf.mean_candidates.is_monotonic_increasing
     assert pdf.n_hits.is_monotonic_increasing
     assert (pdf.n_hits <= pdf.n_queries * 5).all()
-    fn2, _ = STAGED["two_hop_expansion_ceiling"]
+    fn2 = REGISTRY["two_hop_expansion_ceiling"]
     a = fn2(spark, SF_DIR).toPandas().set_index("stage").loc["a_lsh"]
     r0 = pdf[pdf.probe_radius == 0].iloc[0]
     assert r0.n_hits == a.n_hits
@@ -356,7 +361,7 @@ def test_probe_schedule_monotone(spark):
 
 
 def test_session_state_cost_invariants(spark, duck):
-    fn, _ = STAGED["session_gap_state_cost"]
+    fn = REGISTRY["session_gap_state_cost"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("gap_s")
     # a larger gap merges sessions: fewer sessions, each longer
     assert pdf.n_sessions.is_monotonic_decreasing
@@ -380,14 +385,12 @@ def test_bucket_sort_joint_invariants(spark):
     """Bucketing splinters date clustering: runs grow with B, and the
     B=1 baseline equals the global shipdate-sort run count the
     sort-order advisor reports."""
-    fn, _ = STAGED["bucket_sort_joint_advisor"]
+    fn = REGISTRY["bucket_sort_joint_advisor"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("bucket_count")
     assert pdf.n_rows.nunique() == 1
     assert pdf.n_runs_shipdate.is_monotonic_increasing
     assert pdf.avg_run_len_ppm.is_monotonic_decreasing
-    from bigdataentrytask_spark.operators.staging import ROUND10_ACTIVATED
-
-    g_fn, _ = ROUND10_ACTIVATED["sort_order_advisor"]
+    g_fn = REGISTRY["sort_order_advisor"]
     g = (
         g_fn(spark, SF_DIR)
         .toPandas()
@@ -398,7 +401,7 @@ def test_bucket_sort_joint_invariants(spark):
 
 
 def test_pq_adc_recall_invariants(spark):
-    fn, _ = STAGED["pq_adc_recall"]
+    fn = REGISTRY["pq_adc_recall"]
     row = fn(spark, SF_DIR).toPandas().iloc[0]
     assert row.bytes_per_vec == 2
     assert 0 <= row.n_hits <= row.n_queries * 5
@@ -415,7 +418,7 @@ def test_ivf_adc_invariants(spark):
     regime (probes only buy recall when the quantizer is strong).
     Pinned as a regime detector (the residual_pq honest-negative
     pattern); a flip means the corpus or codebook regime changed."""
-    fn, _ = STAGED["ivf_adc_recall"]
+    fn = REGISTRY["ivf_adc_recall"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("nprobe")
     assert pdf.mean_candidates.is_monotonic_increasing
     assert (pdf.n_hits <= pdf.n_queries * 5).all()
@@ -423,6 +426,6 @@ def test_ivf_adc_invariants(spark):
     # nprobe=1 ADC recall cannot beat the all-cells ADC ceiling by
     # more than quantization noise allows: cross-check against
     # pq_adc_recall (same codebook, no cell filter)
-    pq_fn, _ = STAGED["pq_adc_recall"]
+    pq_fn = REGISTRY["pq_adc_recall"]
     pq = pq_fn(spark, SF_DIR).toPandas().iloc[0]
     assert abs(int(pdf.n_hits.iloc[0]) - int(pq.n_hits)) <= 5

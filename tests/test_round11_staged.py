@@ -1,8 +1,6 @@
-"""Round-12 staged operators (VERDICT r10 item 7): implemented and
-differential-tested DURING round 11; ACTIVATED at the round-12
-boundary (VERDICT r11 item 1 — registry 454 -> 470) via
-staging.register_all(), per CONTRIBUTING.md §"Staging operators
-during a registry freeze".
+"""Round-12 operator slate (VERDICT r10 item 7): the 16 operators
+added during round 11, each with its oracle differential and
+per-operator invariants.
 
 Differentials go through DuckDB's PANDAS path with the dtype check
 (the preverify gate) so the HUGEINT class is covered before any op
@@ -13,10 +11,7 @@ from __future__ import annotations
 
 import pytest
 
-from bigdataentrytask_spark.operators import REGISTRY, load_all
-from bigdataentrytask_spark.operators.staging import (
-    ROUND12_ACTIVATED as STAGED,
-)
+from bigdataentrytask_spark.operators import ORACLES, REGISTRY, load_all
 
 from .conftest import SF_DIR, assert_matches_oracle
 
@@ -26,29 +21,36 @@ pytestmark = pytest.mark.slow
 
 load_all()
 
-STAGED_NAMES = sorted(STAGED)
-
-
-def test_round12_activation_complete():
-    """VERDICT r11 item 1: the 16 round-11-staged operators are LIVE —
-    register_all() covers ROUND12_ACTIVATED (registry now 498 after the round-14 activation)
-    and every staged name resolves to its staged function object
-    (not a shadowing duplicate)."""
-    assert len(STAGED) == 16
-    assert len(REGISTRY) == 498
-    for name, (fn, _osql) in STAGED.items():
-        assert REGISTRY[name] is fn
+STAGED_NAMES = (
+    "candidate_budget_recall",
+    "chunk_decay_source_mix",
+    "compacted_zone_pruning",
+    "compaction_floor_sweep",
+    "duplicate_decay_mixture",
+    "ivf_adc_lloyd_recall",
+    "ivf_cell_balance_audit",
+    "pack_length_sweep",
+    "perplexity_pruning_gate",
+    "pq_lloyd_convergence",
+    "pq_lloyd_refinement",
+    "seed_spread_advisor",
+    "session_state_batch_peaks",
+    "shard_mix_uniformity",
+    "sort_key_benefit_ranking",
+    "watermark_state_bytes_joint",
+)
 
 
 def test_round12_staged_all_have_oracles():
-    for name, (fn, osql) in STAGED.items():
+    for name in STAGED_NAMES:
+        fn, osql = REGISTRY[name], ORACLES[name]
         assert callable(fn) and isinstance(osql, str) and "SELECT" in osql
         assert "{" not in osql, f"{name}: unexpanded template in oracle"
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_matches_oracle(spark, duck, name):
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     assert_matches_oracle(fn(spark, SF_DIR), duck, osql, name)
 
 
@@ -57,7 +59,7 @@ def test_staged_pandas_dtype_parity(spark, duck, name):
     """The preverify gate: DuckDB's pandas fetch must not coerce an
     integral column to float64 (HUGEINT fingerprint) while the Spark
     side stays integral."""
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     spdf = fn(spark, SF_DIR).toPandas()
     odf = duck.execute(osql).fetch_df()
     assert sorted(spdf.columns) == sorted(odf.columns)
@@ -72,7 +74,7 @@ def test_staged_pandas_dtype_parity(spark, duck, name):
 
 
 def test_duplicate_decay_mixture_invariants(spark):
-    fn, _ = STAGED["duplicate_decay_mixture"]
+    fn = REGISTRY["duplicate_decay_mixture"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("cluster_size")
     # the k = 1 band reclaims nothing; every k >= 2 band reclaims
     assert pdf.loc[1, "tokens_reclaimed"] == 0
@@ -94,7 +96,7 @@ def test_chunk_decay_source_mix_invariants(spark):
     """Keeper attribution is a sub-multiset of each source's own
     occurrences, and the kept total IS duplicate_decay_mixture's
     decayed total (same distinct-chunk mass, different grouping)."""
-    fn, _ = STAGED["chunk_decay_source_mix"]
+    fn = REGISTRY["chunk_decay_source_mix"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert (pdf.kept_tokens <= pdf.raw_tokens).all()
     # shares are partitions of their budgets; shifts cancel
@@ -103,7 +105,7 @@ def test_chunk_decay_source_mix_invariants(spark):
     assert abs(pdf.shift_ppm.sum()) <= 2 * len(pdf)
     # dedup genuinely re-mixes: some source moves by > 0.1%
     assert pdf.shift_ppm.abs().max() > 1_000
-    dm_fn, _ = STAGED["duplicate_decay_mixture"]
+    dm_fn = REGISTRY["duplicate_decay_mixture"]
     decayed_total = dm_fn(spark, SF_DIR).toPandas().decayed_tokens.sum()
     assert pdf.kept_tokens.sum() == decayed_total
 
@@ -112,7 +114,7 @@ def test_chunk_decay_source_mix_invariants(spark):
 
 
 def test_perplexity_pruning_gate_invariants(spark):
-    fn, _ = STAGED["perplexity_pruning_gate"]
+    fn = REGISTRY["perplexity_pruning_gate"]
     pdf = fn(spark, SF_DIR).toPandas()
     # the sketch rank contract must hold on every source
     assert pdf.sketch_rank_ok.all()
@@ -129,7 +131,7 @@ def test_perplexity_pruning_gate_invariants(spark):
 
 
 def test_compacted_zone_pruning_invariants(spark):
-    fn, _ = STAGED["compacted_zone_pruning"]
+    fn = REGISTRY["compacted_zone_pruning"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("pred_id")
     # scanning is a superset of matching on both layouts
     assert (pdf.rows_scanned_month >= pdf.rows_matched).all()
@@ -145,7 +147,7 @@ def test_compacted_zone_pruning_invariants(spark):
 
 
 def test_sort_key_benefit_ranking_invariants(spark):
-    fn, _ = STAGED["sort_key_benefit_ranking"]
+    fn = REGISTRY["sort_key_benefit_ranking"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("sort_col")
     assert sorted(pdf["rank"]) == [1, 2, 3, 4]
     own = {
@@ -171,7 +173,7 @@ def test_compaction_floor_sweep_frontier(spark):
     """The knob's frontier: bigger floors mean fewer groups and less
     small-file residue but never less data scanned per predicate; the
     400-row column must reproduce compacted_zone_pruning's table."""
-    fn, _ = STAGED["compaction_floor_sweep"]
+    fn = REGISTRY["compaction_floor_sweep"]
     pdf = fn(spark, SF_DIR).toPandas()
     g = pdf.groupby("floor_rows").first().sort_index()
     assert g.n_groups.is_monotonic_decreasing
@@ -180,7 +182,7 @@ def test_compaction_floor_sweep_frontier(spark):
         sub = pdf[pdf.pred_id == p].sort_values("floor_rows")
         assert sub.rows_scanned.is_monotonic_increasing
         assert (sub.read_amp_ppm >= 1_000_000).all()
-    czp_fn, _ = STAGED["compacted_zone_pruning"]
+    czp_fn = REGISTRY["compacted_zone_pruning"]
     czp = (
         czp_fn(spark, SF_DIR).toPandas().set_index("pred_id")
     )
@@ -202,7 +204,7 @@ def test_session_batch_peaks_bounded_by_continuous_sweep(spark):
         session_gap_state_cost,
     )
 
-    fn, _ = STAGED["session_state_batch_peaks"]
+    fn = REGISTRY["session_state_batch_peaks"]
     pdf = fn(spark, SF_DIR).toPandas()
     cont = (
         session_gap_state_cost(spark, SF_DIR)
@@ -221,7 +223,7 @@ def test_session_batch_peaks_bounded_by_continuous_sweep(spark):
 
 
 def test_watermark_state_bytes_monotone_in_delay(spark):
-    fn, _ = STAGED["watermark_state_bytes_joint"]
+    fn = REGISTRY["watermark_state_bytes_joint"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("delay_us")
     # longer retention -> peaks and spans can only grow
     assert pdf.max_open_windows.is_monotonic_increasing
@@ -236,7 +238,7 @@ def test_watermark_state_bytes_monotone_in_delay(spark):
 
 
 def test_ivf_cell_balance_invariants(spark):
-    fn, _ = STAGED["ivf_cell_balance_audit"]
+    fn = REGISTRY["ivf_cell_balance_audit"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert pdf.n_vecs.sum() == 500
     assert sorted(pdf.size_rank) == list(range(1, len(pdf) + 1))
@@ -257,7 +259,7 @@ def test_pq_lloyd_refinement_regime(spark):
     reconstruction distortion and retrieval rank decouple at this
     codebook size. The distortion inequality is the pinned law; the
     recall pair is the pinned fixture regime."""
-    fn, _ = STAGED["pq_lloyd_refinement"]
+    fn = REGISTRY["pq_lloyd_refinement"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("variant")
     assert (
         pdf.loc["b_lloyd1", "total_distortion"]
@@ -269,7 +271,7 @@ def test_pq_lloyd_refinement_regime(spark):
 
 
 def test_candidate_budget_recall_invariants(spark):
-    fn, _ = STAGED["candidate_budget_recall"]
+    fn = REGISTRY["candidate_budget_recall"]
     pdf = fn(spark, SF_DIR).toPandas().set_index(["method", "budget"])
     # recall grows with budget within each method
     for m in ("a_lsh", "b_ivf"):
@@ -296,7 +298,7 @@ def test_seed_spread_advisor_regime(spark):
     UNCHANGED to within 0.1%, i.e. seed spread alone does not fix a
     weak coarse quantizer here (the Lloyd step is the lever that
     moves distortion; see pq_lloyd_refinement)."""
-    fn, _ = STAGED["seed_spread_advisor"]
+    fn = REGISTRY["seed_spread_advisor"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("policy")
     a, b = pdf.loc["a_first"], pdf.loc["b_strided"]
     assert b.min_seed_dist > a.min_seed_dist
@@ -339,7 +341,7 @@ def test_seed_spread_degenerate_tiny_corpus(spark, tmp_path):
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"'{tmp_path}/embeddings.parquet'"
     )
-    fn, osql = STAGED["seed_spread_advisor"]
+    fn, osql = REGISTRY["seed_spread_advisor"], ORACLES["seed_spread_advisor"]
     assert_matches_oracle(
         fn(spark, str(tmp_path)), con, osql, "seed_spread_tiny"
     )
@@ -357,13 +359,13 @@ def test_pq_lloyd_convergence_plateau(spark):
     step-2's (2.1%) by more than 5x. Steps 0/1 cross-pin to
     pq_lloyd_refinement's a_toy/b_lloyd1 totals — same arithmetic,
     independent implementations."""
-    fn, _ = STAGED["pq_lloyd_convergence"]
+    fn = REGISTRY["pq_lloyd_convergence"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("step")
     assert pdf.total_distortion.is_monotonic_decreasing
     assert (pdf.n_dead_codes == 0).all()
     assert pdf.loc[1, "gain"] > 5 * pdf.loc[2, "gain"]
     assert pdf.loc[0, "gain"] == 0
-    ref_fn, _ = STAGED["pq_lloyd_refinement"]
+    ref_fn = REGISTRY["pq_lloyd_refinement"]
     ref = ref_fn(spark, SF_DIR).toPandas().set_index("variant")
     assert (
         pdf.loc[0, "total_distortion"]
@@ -381,7 +383,7 @@ def test_pack_length_sweep_tradeoff(spark):
     raises the share of documents straddling a sequence boundary —
     both columns are strictly monotone across the candidate grid
     (0.96/0.86/0.66 fill, 39%/8%/0% straddle at sf0.01)."""
-    fn, _ = STAGED["pack_length_sweep"]
+    fn = REGISTRY["pack_length_sweep"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("context_len")
     assert pdf.fill_ppm.is_monotonic_decreasing
     assert pdf.straddle_ppm.is_monotonic_decreasing
@@ -395,7 +397,7 @@ def test_shard_mix_uniformity_invariants(spark):
     """Shards partition the corpus; TV is a [0, 1e6] ppm; finer
     sharding has WORSE per-shard composition on a fixed corpus (the
     IID-shards-need-volume story): mean TV at S=16 exceeds S=4."""
-    fn, _ = STAGED["shard_mix_uniformity"]
+    fn = REGISTRY["shard_mix_uniformity"]
     pdf = fn(spark, SF_DIR).toPandas()
     for s, grp in pdf.groupby("shard_count"):
         assert grp.n_docs.sum() == 500
@@ -417,7 +419,7 @@ def test_ivf_adc_lloyd_breaks_falling_regime(spark):
     (same coarse probe)."""
     import __spark_entry__ as e
 
-    fn, _ = STAGED["ivf_adc_lloyd_recall"]
+    fn = REGISTRY["ivf_adc_lloyd_recall"]
     lloyd = fn(spark, SF_DIR).toPandas().set_index("nprobe")
     toy = (
         e.queries()["ivf_adc_recall"](spark, SF_DIR)

@@ -1,7 +1,6 @@
-"""Round-13 staged operators (VERDICT r11 item 6): implemented and
-differential-tested DURING round 12; ACTIVATED at the round-13
-boundary via staging.register_all() (registry 470 -> 484 -> 498), per
-CONTRIBUTING.md §"Staging operators during a registry freeze".
+"""Round-13 operator slate (VERDICT r11 item 6): the 14 operators
+added during round 12, each with its oracle differential and
+per-operator invariants.
 
 Differentials go through DuckDB's PANDAS path with the dtype check
 (the preverify gate) so the HUGEINT class is covered before any op
@@ -12,10 +11,7 @@ from __future__ import annotations
 
 import pytest
 
-from bigdataentrytask_spark.operators import REGISTRY, load_all
-from bigdataentrytask_spark.operators.staging import (
-    ROUND13_ACTIVATED as STAGED,
-)
+from bigdataentrytask_spark.operators import ORACLES, REGISTRY, load_all
 
 from .conftest import SF_DIR, assert_matches_oracle
 
@@ -25,29 +21,34 @@ pytestmark = pytest.mark.slow
 
 load_all()
 
-STAGED_NAMES = sorted(STAGED)
-
-
-def test_round13_activation_complete():
-    """The activation: all 14 round-13 staged ops registered, registry
-    exactly 498, and each registered entry IS the staged function
-    object (identity — register_all must not wrap or copy)."""
-    assert len(STAGED) == 14
-    assert len(REGISTRY) == 498
-    for name, (fn, _osql) in STAGED.items():
-        assert name in REGISTRY
-        assert REGISTRY[name] is fn
+STAGED_NAMES = (
+    "compaction_write_amp",
+    "dedup_quality_survivorship",
+    "dedup_ttl_fixed_twin",
+    "dedup_ttl_state_projection",
+    "ivf_cell_lloyd_convergence",
+    "ivf_cell_lloyd_probe",
+    "lsh_band_width_sweep",
+    "pack_padding_sweep",
+    "perplexity_gate_by_lang",
+    "quality_prune_mix_shift",
+    "quantization_budget_pareto",
+    "shard_stratified_twin",
+    "state_sizing_threeway",
+    "workload_weighted_sort_advisor",
+)
 
 
 def test_round13_staged_all_have_oracles():
-    for name, (fn, osql) in STAGED.items():
+    for name in STAGED_NAMES:
+        fn, osql = REGISTRY[name], ORACLES[name]
         assert callable(fn) and isinstance(osql, str) and "SELECT" in osql
         assert "{" not in osql, f"{name}: unexpanded template in oracle"
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_matches_oracle(spark, duck, name):
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     assert_matches_oracle(fn(spark, SF_DIR), duck, osql, name)
 
 
@@ -56,7 +57,7 @@ def test_staged_pandas_dtype_parity(spark, duck, name):
     """The preverify gate: DuckDB's pandas fetch must not coerce an
     integral column to float64 (HUGEINT fingerprint) while the Spark
     side stays integral."""
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     spdf = fn(spark, SF_DIR).toPandas()
     odf = duck.execute(osql).fetch_df()
     assert sorted(spdf.columns) == sorted(odf.columns)
@@ -76,7 +77,7 @@ def test_shard_stratified_twin_dominates_hashing(spark):
     at EVERY candidate shard count — and on this equal-sized-sources
     fixture the stratified TV is exactly zero (floor/ceil placement
     is exactly proportional when 20 sources have 25 docs each)."""
-    fn, _ = STAGED["shard_stratified_twin"]
+    fn = REGISTRY["shard_stratified_twin"]
     pdf = fn(spark, SF_DIR).toPandas().set_index(["shard_count", "policy"])
     for s in (4, 16):
         strat = pdf.loc[(s, "b_stratified")]
@@ -96,7 +97,7 @@ def test_shard_stratified_twin_dominates_hashing(spark):
 
 
 def test_perplexity_gate_by_lang_refines_source_gate(spark):
-    fn, _ = STAGED["perplexity_gate_by_lang"]
+    fn = REGISTRY["perplexity_gate_by_lang"]
     pdf = fn(spark, SF_DIR).toPandas()
     # the (lang, source) grid genuinely refines the 20-source gate
     assert len(pdf) > 20
@@ -123,7 +124,7 @@ def test_pack_padding_sweep_vs_flow(spark):
     non-monotone fill shape: the mid L is the pad-mode sweet spot."""
     from bigdataentrytask_spark.operators import REGISTRY as REG
 
-    fn, _ = STAGED["pack_padding_sweep"]
+    fn = REGISTRY["pack_padding_sweep"]
     pad = fn(spark, SF_DIR).toPandas().set_index("context_len")
     flow = (
         REG["pack_length_sweep"](spark, SF_DIR)
@@ -150,7 +151,7 @@ def test_quality_prune_mix_shift_ledger(spark):
     budgets, shifts cancel up to rounding, kept mass never exceeds
     raw, pruned docs match the (lang, source) gate's total, and the
     gate genuinely re-mixes (some source moves)."""
-    fn, _ = STAGED["quality_prune_mix_shift"]
+    fn = REGISTRY["quality_prune_mix_shift"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert len(pdf) == 20
     assert (pdf.kept_tokens <= pdf.raw_tokens).all()
@@ -159,7 +160,7 @@ def test_quality_prune_mix_shift_ledger(spark):
     assert abs(pdf.shift_ppm.sum()) <= 2 * len(pdf)
     assert pdf.shift_ppm.abs().max() > 0
     assert (pdf.n_pruned <= pdf.n_docs // 10).all()
-    gate_fn, _ = STAGED["perplexity_gate_by_lang"]
+    gate_fn = REGISTRY["perplexity_gate_by_lang"]
     gate = gate_fn(spark, SF_DIR).toPandas()
     assert pdf.n_pruned.sum() == gate.n_pruned.sum()
 
@@ -168,7 +169,7 @@ def test_quality_prune_mix_shift_ledger(spark):
 
 
 def test_dedup_quality_survivorship_invariants(spark):
-    fn, _ = STAGED["dedup_quality_survivorship"]
+    fn = REGISTRY["dedup_quality_survivorship"]
     r = fn(spark, SF_DIR).toPandas().iloc[0]
     # clusters are multi-doc by construction
     assert r.n_docs_clustered >= 2 * r.n_clusters
@@ -188,7 +189,7 @@ def test_lsh_band_width_sweep_s_curve(spark):
     candidate sets nest); the verified pipeline's own (8 x 4) config
     sits at the knee (>99% sliced recall at ~2/3 the widest
     volume)."""
-    fn, _ = STAGED["lsh_band_width_sweep"]
+    fn = REGISTRY["lsh_band_width_sweep"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values(
         "bands", ascending=False
     )
@@ -210,7 +211,7 @@ def test_lsh_band_width_sweep_s_curve(spark):
 def test_dedup_ttl_state_projection_frontier(spark):
     """Both directions of the TTL trade are monotone, and the
     accounting identities are exact."""
-    fn, _ = STAGED["dedup_ttl_state_projection"]
+    fn = REGISTRY["dedup_ttl_state_projection"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("ttl_s")
     assert pdf.n_keys.nunique() == 1  # key domain is TTL-independent
     assert pdf.n_events.nunique() == 1
@@ -230,8 +231,8 @@ def test_dedup_ttl_fixed_vs_sliding(spark):
     refreshes, so its horizons sit earlier and it re-admits at least
     as often as the sliding twin at every TTL — catching fewer or
     equal duplicates. Same key domain, same accounting identities."""
-    fx_fn, _ = STAGED["dedup_ttl_fixed_twin"]
-    sl_fn, _ = STAGED["dedup_ttl_state_projection"]
+    fx_fn = REGISTRY["dedup_ttl_fixed_twin"]
+    sl_fn = REGISTRY["dedup_ttl_state_projection"]
     fx = fx_fn(spark, SF_DIR).toPandas().set_index("ttl_s")
     sl = sl_fn(spark, SF_DIR).toPandas().set_index("ttl_s")
     assert (fx.n_keys == sl.n_keys).all()
@@ -256,19 +257,16 @@ def test_state_sizing_threeway_cross_pins(spark):
     (gap, trigger) grid; sampled window peaks are bounded by the
     continuous endpoint-sweep peaks per delay; and the joint peak
     never exceeds the sum of the marginals."""
-    from bigdataentrytask_spark.operators.staging import (
-        ROUND12_ACTIVATED,
-    )
 
-    fn, _ = STAGED["state_sizing_threeway"]
+    fn = REGISTRY["state_sizing_threeway"]
     pdf = fn(spark, SF_DIR).toPandas()
     sess = (
-        ROUND12_ACTIVATED["session_state_batch_peaks"][0](spark, SF_DIR)
+        REGISTRY["session_state_batch_peaks"](spark, SF_DIR)
         .toPandas()
         .set_index(["gap_s", "trigger_s"])["max_state_at_batch"]
     )
     wm = (
-        ROUND12_ACTIVATED["watermark_state_bytes_joint"][0](spark, SF_DIR)
+        REGISTRY["watermark_state_bytes_joint"](spark, SF_DIR)
         .toPandas()
         .set_index("delay_label")["max_open_windows"]
     )
@@ -301,11 +299,8 @@ def test_workload_weighted_sort_advisor_flips_top(spark):
     workload on this corpus: o_custkey wins the uniform mean but
     o_orderdate wins the weighted one — pinned, with exact weighted
     arithmetic re-derivable from sort_key_benefit_ranking's row."""
-    from bigdataentrytask_spark.operators.staging import (
-        ROUND12_ACTIVATED,
-    )
 
-    fn, _ = STAGED["workload_weighted_sort_advisor"]
+    fn = REGISTRY["workload_weighted_sort_advisor"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("sort_col")
     assert pdf.loc["o_orderdate", "rank_weighted"] == 1
     assert pdf.loc["o_custkey", "rank_uniform"] == 1
@@ -314,7 +309,7 @@ def test_workload_weighted_sort_advisor_flips_top(spark):
     assert sorted(pdf.rank_uniform) == [1, 2, 3, 4]
     # exact cross-pin of the weighted sum against the parent table
     skb = (
-        ROUND12_ACTIVATED["sort_key_benefit_ranking"][0](spark, SF_DIR)
+        REGISTRY["sort_key_benefit_ranking"](spark, SF_DIR)
         .toPandas()
         .set_index("sort_col")
     )
@@ -333,11 +328,8 @@ def test_compaction_write_amp_frontier(spark):
     rewritten and the workload-mean read amplification; accounting
     identities exact; the 400-row column cross-pins
     compaction_floor_sweep's group census."""
-    from bigdataentrytask_spark.operators.staging import (
-        ROUND12_ACTIVATED,
-    )
 
-    fn, _ = STAGED["compaction_write_amp"]
+    fn = REGISTRY["compaction_write_amp"]
     pdf = fn(spark, SF_DIR).toPandas().sort_values("floor_rows")
     assert pdf.n_parts_in.nunique() == 1
     assert pdf.rows_total.nunique() == 1
@@ -351,7 +343,7 @@ def test_compaction_write_amp_frontier(spark):
         == (pdf.rows_rewritten * 1e6 / pdf.rows_total).round()
     ).all()
     cfs = (
-        ROUND12_ACTIVATED["compaction_floor_sweep"][0](spark, SF_DIR)
+        REGISTRY["compaction_floor_sweep"](spark, SF_DIR)
         .toPandas()
         .groupby("floor_rows")
         .first()
@@ -374,7 +366,7 @@ def test_quantization_budget_pareto_regime(spark):
     prefix at BOTH budgets (prefix truncation keeps 1/4 of the
     energy, sign bits keep all 64 dims' directions) — the check-
     isotropy-before-matryoshka serving advisory, pinned."""
-    fn, _ = STAGED["quantization_budget_pareto"]
+    fn = REGISTRY["quantization_budget_pareto"]
     pdf = fn(spark, SF_DIR).toPandas().set_index(["config", "budget"])
     for b in (10, 50):
         assert pdf.loc[("a_exact_f32", b), "recall_at_5"] == 1.0
@@ -397,7 +389,7 @@ def test_ivf_cell_lloyd_probe_regime(spark):
     the nprobe=1 coverage DIPS slightly (0.78 -> 0.76), the honest
     single-probe nuance. Coverage is monotone in nprobe within each
     variant by construction."""
-    fn, _ = STAGED["ivf_cell_lloyd_probe"]
+    fn = REGISTRY["ivf_cell_lloyd_probe"]
     pdf = fn(spark, SF_DIR).toPandas().set_index(["variant", "nprobe"])
     toy_d = pdf.loc[("a_toy", 1), "total_distortion"]
     ref_d = pdf.loc[("b_lloyd1", 1), "total_distortion"]
@@ -431,13 +423,13 @@ def test_ivf_cell_lloyd_convergence_plateau(spark):
     dwarfs step-2's by far more than 5x), and steps 0/1 cross-pin
     ivf_cell_lloyd_probe's a_toy/b_lloyd1 totals exactly — same
     arithmetic, independent implementations."""
-    fn, _ = STAGED["ivf_cell_lloyd_convergence"]
+    fn = REGISTRY["ivf_cell_lloyd_convergence"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("step")
     assert pdf.total_distortion.is_monotonic_decreasing
     assert (pdf.n_cells_used == 8).all()
     assert pdf.loc[0, "gain"] == 0
     assert pdf.loc[1, "gain"] > 5 * pdf.loc[2, "gain"]
-    probe_fn, _ = STAGED["ivf_cell_lloyd_probe"]
+    probe_fn = REGISTRY["ivf_cell_lloyd_probe"]
     probe = (
         probe_fn(spark, SF_DIR).toPandas().set_index(["variant", "nprobe"])
     )

@@ -1,7 +1,6 @@
-"""Round-14 staged operators (ROADMAP §"Round 14+"): implemented and
-differential-tested DURING round 13; zero registry delta until the
-round-14 boundary activates them via staging.register_all(), per
-CONTRIBUTING.md §"Staging operators during a registry freeze".
+"""Round-14 operator slate (ROADMAP §"Round 14+"): the 14 operators
+added during round 13, each with its oracle differential and
+per-operator invariants.
 
 Differentials go through DuckDB's PANDAS path with the dtype check
 (the preverify gate) so the HUGEINT class is covered before any op
@@ -12,9 +11,7 @@ from __future__ import annotations
 
 import pytest
 
-from bigdataentrytask_spark.operators import REGISTRY, load_all
-from bigdataentrytask_spark.operators.staging import ROUND14_ACTIVATED as STAGED
-
+from bigdataentrytask_spark.operators import ORACLES, REGISTRY, load_all
 from .conftest import SF_DIR, assert_matches_oracle
 
 # Staged-slate suite: excluded from the default driver gate (see
@@ -23,30 +20,34 @@ pytestmark = pytest.mark.slow
 
 load_all()
 
-STAGED_NAMES = sorted(STAGED)
-
-
-def test_round14_activation_complete():
-    """Round-14 boundary activation (VERDICT r13 item 1): the 14
-    round-14 ops are registered, the registry is exactly 498, and
-    each registered entry IS the staged function object (identity —
-    register_all must not wrap or replace)."""
-    assert len(STAGED) == 14
-    assert len(REGISTRY) == 498
-    for name, (fn, _osql) in STAGED.items():
-        assert name in REGISTRY
-        assert REGISTRY[name] is fn
+STAGED_NAMES = (
+    "adc_recall_tail",
+    "compaction_policy_pareto",
+    "compaction_read_bill",
+    "compaction_schedule_amortizer",
+    "dedup_ttl_policy_joint",
+    "funnel_order_sensitivity",
+    "funnel_threshold_provenance",
+    "gate_stacking_ledger",
+    "ivf_adc_refined_joint_recall",
+    "post_gate_mix_rebalance",
+    "residual_adc_recall",
+    "residual_code_utilization",
+    "residual_pq_refined_cells",
+    "trigger_sampling_deficit",
+)
 
 
 def test_round14_staged_all_have_oracles():
-    for name, (fn, osql) in STAGED.items():
+    for name in STAGED_NAMES:
+        fn, osql = REGISTRY[name], ORACLES[name]
         assert callable(fn) and isinstance(osql, str) and "SELECT" in osql
         assert "{" not in osql, f"{name}: unexpanded template in oracle"
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_matches_oracle(spark, duck, name):
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     assert_matches_oracle(fn(spark, SF_DIR), duck, osql, name)
 
 
@@ -55,7 +56,7 @@ def test_staged_pandas_dtype_parity(spark, duck, name):
     """The preverify gate: DuckDB's pandas fetch must not coerce an
     integral column to float64 (HUGEINT fingerprint) while the Spark
     side stays integral."""
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     spdf = fn(spark, SF_DIR).toPandas()
     odf = duck.execute(osql).fetch_df()
     assert sorted(spdf.columns) == sorted(odf.columns)
@@ -75,12 +76,10 @@ def test_compaction_schedule_amortizer_frontier(spark):
     bill but keeps every part loose; on_close sits between on BOTH
     axes. The on_close rewrite bill is exactly compaction_write_amp's
     end-state number per floor."""
-    fn, _ = STAGED["compaction_schedule_amortizer"]
+    fn = REGISTRY["compaction_schedule_amortizer"]
     pdf = fn(spark, SF_DIR).toPandas().set_index(["floor_rows", "policy"])
-    from bigdataentrytask_spark.operators.staging import ROUND13_ACTIVATED
-
     wa = (
-        ROUND13_ACTIVATED["compaction_write_amp"][0](spark, SF_DIR)
+        REGISTRY["compaction_write_amp"](spark, SF_DIR)
         .toPandas()
         .set_index("floor_rows")
     )
@@ -120,17 +119,15 @@ def test_dedup_ttl_policy_joint_cross_pins(spark):
     the sampled per-policy peaks are bounded by the twins' continuous
     peak_state_keys — and on this corpus the 60 s trigger samples
     densely enough to HIT both continuous peaks exactly."""
-    fn, _ = STAGED["dedup_ttl_policy_joint"]
+    fn = REGISTRY["dedup_ttl_policy_joint"]
     pdf = fn(spark, SF_DIR).toPandas()
-    from bigdataentrytask_spark.operators.staging import ROUND13_ACTIVATED
-
     sl = (
-        ROUND13_ACTIVATED["dedup_ttl_state_projection"][0](spark, SF_DIR)
+        REGISTRY["dedup_ttl_state_projection"](spark, SF_DIR)
         .toPandas()
         .set_index("ttl_s")
     )
     fx = (
-        ROUND13_ACTIVATED["dedup_ttl_fixed_twin"][0](spark, SF_DIR)
+        REGISTRY["dedup_ttl_fixed_twin"](spark, SF_DIR)
         .toPandas()
         .set_index("ttl_s")
     )
@@ -181,7 +178,7 @@ def test_gate_stacking_ledger_funnel(spark):
     pinned against the standalone gates: stage-1 survivors are
     exactly dedup_exact's group count, and the raw mass is exactly
     the documents table."""
-    fn, _ = STAGED["gate_stacking_ledger"]
+    fn = REGISTRY["gate_stacking_ledger"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert (pdf.n_raw >= pdf.n_dedup).all()
     assert (pdf.n_dedup >= pdf.n_ppl).all()
@@ -206,7 +203,7 @@ def test_post_gate_mix_rebalance_closes_the_loop(spark):
     clamp, same rounding), kept mass never exceeds raw mass, the
     kept shares re-normalize to ~1e6, and the shift column is the
     signed difference it claims to be."""
-    fn, _ = STAGED["post_gate_mix_rebalance"]
+    fn = REGISTRY["post_gate_mix_rebalance"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("source")
     mix = (
         REGISTRY["domain_mix_planner"](spark, SF_DIR)
@@ -240,7 +237,7 @@ def test_ivf_adc_refined_joint_completes_2x2(spark):
     row on the sweep axis, its candidate volumes stay sane, and the
     refined coarse quantizer genuinely moves the candidate sets (the
     two refinements are not redundant)."""
-    fn, _ = STAGED["ivf_adc_refined_joint_recall"]
+    fn = REGISTRY["ivf_adc_refined_joint_recall"]
     joint = fn(spark, SF_DIR).toPandas().set_index("nprobe")
     lloyd = (
         REGISTRY["ivf_adc_lloyd_recall"](spark, SF_DIR)
@@ -264,7 +261,7 @@ def test_residual_pq_refined_cells_sign_flips(spark):
     honest negative, recomputed bit-for-bit), and ONE cell-Lloyd
     step flips it POSITIVE in every subspace — residual variance
     drops below raw variance once the coarse centroids are real."""
-    fn, _ = STAGED["residual_pq_refined_cells"]
+    fn = REGISTRY["residual_pq_refined_cells"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("sub")
     base = (
         REGISTRY["residual_pq_distortion"](spark, SF_DIR)
@@ -292,9 +289,9 @@ def test_funnel_order_sensitivity_is_real(spark):
     unique keeps occur on this corpus. Consistency: n_final_a is
     exactly gate_stacking_ledger's n_quality (order A IS the
     ledger's funnel)."""
-    fn, _ = STAGED["funnel_order_sensitivity"]
+    fn = REGISTRY["funnel_order_sensitivity"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("source")
-    ledger_fn, _ = STAGED["gate_stacking_ledger"]
+    ledger_fn = REGISTRY["gate_stacking_ledger"]
     ledger = ledger_fn(spark, SF_DIR).toPandas().set_index("source")
     for s in pdf.index:
         assert pdf.loc[s, "n_final_a"] == ledger.loc[s, "n_quality"]
@@ -320,7 +317,7 @@ def test_trigger_sampling_deficit_monotone(spark):
     """Sampling can only miss: deficit >= 0 everywhere, non-
     decreasing in trigger_s per (ttl, policy), and the joint table's
     pinned ttl=1800 one-key miss reproduces on both policies."""
-    fn, _ = STAGED["trigger_sampling_deficit"]
+    fn = REGISTRY["trigger_sampling_deficit"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert (pdf.deficit_keys >= 0).all()
     assert (
@@ -332,15 +329,13 @@ def test_trigger_sampling_deficit_monotone(spark):
     m1800 = pdf[pdf.ttl_s == 1800]
     assert (m1800.deficit_keys == 1).all()
     # the continuous peaks pin to the TTL twins' columns
-    from bigdataentrytask_spark.operators.staging import ROUND13_ACTIVATED
-
     sl = (
-        ROUND13_ACTIVATED["dedup_ttl_state_projection"][0](spark, SF_DIR)
+        REGISTRY["dedup_ttl_state_projection"](spark, SF_DIR)
         .toPandas()
         .set_index("ttl_s")
     )
     fx = (
-        ROUND13_ACTIVATED["dedup_ttl_fixed_twin"][0](spark, SF_DIR)
+        REGISTRY["dedup_ttl_fixed_twin"](spark, SF_DIR)
         .toPandas()
         .set_index("ttl_s")
     )
@@ -355,9 +350,9 @@ def test_residual_adc_recall_vs_raw_codebook(spark):
     exactly equal mean_candidates) — only the in-cell scorer differs.
     The distortion win does NOT automatically carry to recall; both
     directions stay pinned by the shared schema for the row diff."""
-    fn, _ = STAGED["residual_adc_recall"]
+    fn = REGISTRY["residual_adc_recall"]
     res = fn(spark, SF_DIR).toPandas().set_index("nprobe")
-    joint_fn, _ = STAGED["ivf_adc_refined_joint_recall"]
+    joint_fn = REGISTRY["ivf_adc_refined_joint_recall"]
     joint = joint_fn(spark, SF_DIR).toPandas().set_index("nprobe")
     assert list(res.columns) == list(joint.columns)
     assert list(res.index) == list(joint.index)
@@ -375,7 +370,7 @@ def test_compaction_read_bill_prunes_loose_parts(spark):
     highest — merging buys file count (the amortizer's axis), not
     scanned rows. at_end's bill is floor-independent (no merging
     ever happens), and merged policies' bills grow with the floor."""
-    fn, _ = STAGED["compaction_read_bill"]
+    fn = REGISTRY["compaction_read_bill"]
     pdf = fn(spark, SF_DIR).toPandas().set_index(["floor_rows", "policy"])
     floors = sorted({f for f, _ in pdf.index})
     for f in floors:
@@ -400,7 +395,7 @@ def test_residual_code_utilization_not_collapsed(spark):
     live in every subspace for both codebooks, and the max share
     stays far from degeneracy. The no-recall-gain is corpus isotropy,
     not encode pathology."""
-    fn, _ = STAGED["residual_code_utilization"]
+    fn = REGISTRY["residual_code_utilization"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert set(pdf.codebook) == {"a_flat", "b_residual"}
     assert (pdf.n_codes_used == 16).all()
@@ -415,7 +410,7 @@ def test_funnel_threshold_provenance_mechanism(spark):
     order-B population is the order-A population minus the quality-
     cut docs, thresholds move only where population dropped, and
     pruned counts respect the 10% ceiling in both orders."""
-    fn, _ = STAGED["funnel_threshold_provenance"]
+    fn = REGISTRY["funnel_threshold_provenance"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert (pdf.pop_drop >= 0).all()
     assert (pdf.n_pop_b + pdf.pop_drop == pdf.n_pop_a).all()
@@ -445,11 +440,11 @@ def test_compaction_policy_pareto_face(spark):
     same op puts at_end ON the face (merging is common and the
     zone-pruning inversion bites). A compaction owner cannot reuse a
     face across corpus scales — which is why the op exists."""
-    fn, _ = STAGED["compaction_policy_pareto"]
+    fn = REGISTRY["compaction_policy_pareto"]
     pdf = fn(spark, SF_DIR).toPandas().set_index(["floor_rows", "policy"])
-    am_fn, _ = STAGED["compaction_schedule_amortizer"]
+    am_fn = REGISTRY["compaction_schedule_amortizer"]
     am = am_fn(spark, SF_DIR).toPandas().set_index(["floor_rows", "policy"])
-    rb_fn, _ = STAGED["compaction_read_bill"]
+    rb_fn = REGISTRY["compaction_read_bill"]
     rb = rb_fn(spark, SF_DIR).toPandas().set_index(["floor_rows", "policy"])
     for idx in pdf.index:
         assert pdf.loc[idx, "write_amp_ppm"] == am.loc[idx, "write_amp_ppm"]
@@ -476,15 +471,15 @@ def test_adc_recall_tail_ties_to_sweeps(spark):
     c_residual == residual_adc_recall), and the tail is the story:
     BOTH scorers strand at least one query at zero hits at every
     nprobe — the mean hides a worst-query SLO violation."""
-    fn, _ = STAGED["adc_recall_tail"]
+    fn = REGISTRY["adc_recall_tail"]
     pdf = fn(spark, SF_DIR).toPandas().set_index(["variant", "nprobe"])
     joint = (
-        STAGED["ivf_adc_refined_joint_recall"][0](spark, SF_DIR)
+        REGISTRY["ivf_adc_refined_joint_recall"](spark, SF_DIR)
         .toPandas()
         .set_index("nprobe")
     )
     res = (
-        STAGED["residual_adc_recall"][0](spark, SF_DIR)
+        REGISTRY["residual_adc_recall"](spark, SF_DIR)
         .toPandas()
         .set_index("nprobe")
     )

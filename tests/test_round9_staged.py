@@ -1,7 +1,6 @@
-"""Round-10 staged operators (VERDICT r8 item 6): implemented and
-differential-tested DURING round 9 while the registry is frozen —
-zero registry delta until operators/staging.py's register_all() runs
-at the round-10 boundary.
+"""Round-10 operator slate (VERDICT r8 item 6): the 17 operators
+added during round 9, each with its oracle differential and
+per-operator invariants.
 
 The differential here goes through DuckDB's PANDAS path with a dtype
 check (the preverify gate), not just fetchall — so the HUGEINT class
@@ -14,13 +13,10 @@ import duckdb
 import pandas as pd
 import pytest
 
-from bigdataentrytask_spark.operators import REGISTRY, load_all
+from bigdataentrytask_spark.operators import ORACLES, REGISTRY, load_all
 from bigdataentrytask_spark.operators.dedup import (
     _SUBSTR_L,
     substring_dedup_audit,
-)
-from bigdataentrytask_spark.operators.staging import (
-    ROUND10_ACTIVATED as STAGED,
 )
 
 from .conftest import SF_DIR, assert_matches_oracle
@@ -31,25 +27,30 @@ pytestmark = pytest.mark.slow
 
 load_all()
 
-STAGED_NAMES = sorted(STAGED)
-
-
-def test_round10_activation_complete():
-    """VERDICT r9 item 1: the 17 round-9-staged operators are LIVE —
-    staging.register_all() is wired into operators.load_all(), so the
-    registry holds them and every staged name resolves to its staged
-    function object (not a shadowing duplicate). Registry total moved
-    432 -> 454 at the round-11 activation (VERDICT r10 item 1),
-    454 -> 470 at the round-12 activation (VERDICT r11 item 1),
-    470 -> 484 -> 498 at the round-14 activation."""
-    assert len(REGISTRY) == 498
-    for name, (fn, _osql) in STAGED.items():
-        assert REGISTRY[name] is fn
+STAGED_NAMES = (
+    "binary_quantization_recall",
+    "boilerplate_chunk_census",
+    "column_quantile_sketch_gate",
+    "crosslingual_neardup_eval",
+    "dict_encoding_advisor",
+    "graph_expansion_recall",
+    "hnsw_layer_audit",
+    "length_truncation_audit",
+    "matryoshka_recall_sweep",
+    "residual_pq_distortion",
+    "rle_bitpack_advisor",
+    "sort_order_advisor",
+    "stream_state_projection",
+    "substring_dedup_audit",
+    "trigger_interval_advisor",
+    "url_host_frontier_stats",
+    "watermark_lag_histogram",
+)
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_matches_oracle(spark, duck, name):
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     assert_matches_oracle(fn(spark, SF_DIR), duck, osql, name)
 
 
@@ -59,7 +60,7 @@ def test_staged_pandas_dtype_parity(spark, duck, name):
     integral column to float64 (HUGEINT fingerprint) while the Spark
     side stays integral, and no Spark column may surface as
     decimal.Decimal objects."""
-    fn, osql = STAGED[name]
+    fn, osql = REGISTRY[name], ORACLES[name]
     spdf = fn(spark, SF_DIR).toPandas()
     odf = duck.execute(osql).fetch_df()
     assert sorted(spdf.columns) == sorted(odf.columns)
@@ -127,8 +128,8 @@ def test_substring_island_math_handcrafted(spark, tmp_path):
 
 
 def test_round10_staged_all_have_oracles():
-    assert len(STAGED) >= 4
-    for name, (fn, osql) in STAGED.items():
+    for name in STAGED_NAMES:
+        fn, osql = REGISTRY[name], ORACLES[name]
         assert callable(fn) and isinstance(osql, str) and "SELECT" in osql
         assert "{" not in osql, f"{name}: unexpanded template in oracle"
 
@@ -136,7 +137,7 @@ def test_round10_staged_all_have_oracles():
 def test_matryoshka_recall_monotone_in_prefix(spark):
     """More dimensions can only add information: recall@5 at d=32 must
     be >= recall at d=8 (ties broken identically)."""
-    fn, _ = STAGED["matryoshka_recall_sweep"]
+    fn = REGISTRY["matryoshka_recall_sweep"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("d_prefix")
     assert pdf.loc[32, "n_hits"] >= pdf.loc[8, "n_hits"]
     assert (pdf.n_hits <= pdf.n_queries * 5).all()
@@ -145,7 +146,7 @@ def test_matryoshka_recall_monotone_in_prefix(spark):
 def test_sort_advisor_shipdate_order_lengthens_shipdate_runs(spark):
     """Sorting by shipdate must strictly reduce the shipdate run count
     vs the natural order (that's the advisor's entire point)."""
-    fn, _ = STAGED["sort_order_advisor"]
+    fn = REGISTRY["sort_order_advisor"]
     pdf = fn(spark, SF_DIR).toPandas().set_index(["ordering", "col_name"])
     nat = pdf.loc[("natural", "l_shipdate"), "n_runs"]
     shp = pdf.loc[("shipdate", "l_shipdate"), "n_runs"]
@@ -155,7 +156,7 @@ def test_sort_advisor_shipdate_order_lengthens_shipdate_runs(spark):
 
 
 def test_url_frontier_invariants(spark):
-    fn, _ = STAGED["url_host_frontier_stats"]
+    fn = REGISTRY["url_host_frontier_stats"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert (pdf.n_hosts <= pdf.n_urls).all()
     assert (pdf.max_host_load <= pdf.n_urls).all()
@@ -165,7 +166,7 @@ def test_url_frontier_invariants(spark):
 
 
 def test_residual_pq_invariants(spark):
-    fn, _ = STAGED["residual_pq_distortion"]
+    fn = REGISTRY["residual_pq_distortion"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("sub")
     assert sorted(pdf.index) == [0, 1, 2, 3]
     assert (pdf.n_vecs == 500).all()
@@ -178,7 +179,7 @@ def test_residual_pq_invariants(spark):
 
 
 def test_crosslingual_invariants(spark):
-    fn, _ = STAGED["crosslingual_neardup_eval"]
+    fn = REGISTRY["crosslingual_neardup_eval"]
     pdf = fn(spark, SF_DIR).toPandas()
     # 5 langs -> 10 unordered cross pairs, all with truth on this corpus
     assert len(pdf) == 10
@@ -190,7 +191,7 @@ def test_crosslingual_invariants(spark):
 
 
 def test_watermark_lag_invariants(spark):
-    fn, _ = STAGED["watermark_lag_histogram"]
+    fn = REGISTRY["watermark_lag_histogram"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert pdf.n_events.sum() == 10_000
     assert abs(pdf.share_ppm.sum() - 1_000_000) <= len(pdf)  # rounding
@@ -201,7 +202,7 @@ def test_watermark_lag_invariants(spark):
 
 
 def test_hnsw_layer_audit_invariants(spark):
-    fn, _ = STAGED["hnsw_layer_audit"]
+    fn = REGISTRY["hnsw_layer_audit"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("layer")
     assert list(pdf.index) == [1, 2, 3, 4]
     # geometric occupancy: each layer roughly halves (loose 3x bound)
@@ -214,7 +215,7 @@ def test_hnsw_layer_audit_invariants(spark):
 
 
 def test_quantile_sketch_gate_invariants(spark):
-    fn, _ = STAGED["column_quantile_sketch_gate"]
+    fn = REGISTRY["column_quantile_sketch_gate"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert len(pdf) == 8  # 2 columns x 4 quantiles
     assert pdf.sketch_ok.all()  # the sketch honors its rank contract
@@ -225,7 +226,7 @@ def test_quantile_sketch_gate_invariants(spark):
 
 
 def test_dict_advisor_invariants(spark):
-    fn, _ = STAGED["dict_encoding_advisor"]
+    fn = REGISTRY["dict_encoding_advisor"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("col_name")
     assert len(pdf) == 10
     assert (pdf.ndv <= pdf.n_rows).all()
@@ -240,7 +241,7 @@ def test_dict_advisor_invariants(spark):
 
 
 def test_binary_quantization_invariants(spark):
-    fn, _ = STAGED["binary_quantization_recall"]
+    fn = REGISTRY["binary_quantization_recall"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert len(pdf) == 1
     r = pdf.iloc[0]
@@ -249,7 +250,7 @@ def test_binary_quantization_invariants(spark):
 
 
 def test_boilerplate_census_invariants(spark):
-    fn, _ = STAGED["boilerplate_chunk_census"]
+    fn = REGISTRY["boilerplate_chunk_census"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert len(pdf) == 20  # one row per source
     assert (pdf.n_shared_head <= pdf.n_docs).all()
@@ -258,7 +259,7 @@ def test_boilerplate_census_invariants(spark):
 
 
 def test_trigger_advisor_invariants(spark):
-    fn, _ = STAGED["trigger_interval_advisor"]
+    fn = REGISTRY["trigger_interval_advisor"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("interval_s")
     assert list(pdf.index) == [60, 300, 900, 3600]
     assert (pdf.n_events == 10_000).all()
@@ -269,7 +270,7 @@ def test_trigger_advisor_invariants(spark):
 
 
 def test_rle_advisor_invariants(spark):
-    fn, _ = STAGED["rle_bitpack_advisor"]
+    fn = REGISTRY["rle_bitpack_advisor"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("col_name")
     assert (pdf.n_runs <= pdf.n_rows).all()
     assert (pdf.ndv <= pdf.n_runs).all()
@@ -280,7 +281,7 @@ def test_rle_advisor_invariants(spark):
 
 
 def test_graph_expansion_invariants(spark):
-    fn, _ = STAGED["graph_expansion_recall"]
+    fn = REGISTRY["graph_expansion_recall"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("stage")
     assert list(pdf.index) == ["a_lsh", "b_lsh_1hop"]
     # expansion is a SUPERSET: volume and hits can only grow
@@ -290,7 +291,7 @@ def test_graph_expansion_invariants(spark):
 
 
 def test_truncation_audit_invariants(spark):
-    fn, _ = STAGED["length_truncation_audit"]
+    fn = REGISTRY["length_truncation_audit"]
     pdf = fn(spark, SF_DIR).toPandas()
     assert len(pdf) == 20
     assert (pdf.n_at_max >= 1).all()           # the max is always attained
@@ -301,7 +302,7 @@ def test_truncation_audit_invariants(spark):
 
 
 def test_state_projection_invariants(spark):
-    fn, _ = STAGED["stream_state_projection"]
+    fn = REGISTRY["stream_state_projection"]
     pdf = fn(spark, SF_DIR).toPandas().set_index("horizon_s")
     assert list(pdf.index) == [60, 300, 3600]
     # longer horizon holds at least as much state, same bucket count
